@@ -1,6 +1,7 @@
 """Driver-side filesystem primitives for the persisted-index stores
-(CURRENT pointers, footer manifests, base-partition discovery),
-dispatching on the path form:
+(CURRENT pointers, footer manifests, base-partition discovery) and the
+warehouse (table existence, schema records, backfill's partition
+drop), dispatching on the path form:
 
 - **Plain local paths** (no scheme) take the exact ``os``/``glob``
   code the stores have always used — fast, zero JVM round-trips, and
@@ -32,6 +33,7 @@ any Spark action they gate.
 from __future__ import annotations
 
 import os
+import shutil
 
 
 def is_uri(path: str) -> bool:
@@ -117,8 +119,10 @@ def write_text_atomic(path: str, text: str) -> None:
     ``.tmp`` behind; callers that need recovery semantics read the
     ``.tmp`` as the fallback (see ``_writes.resolve_current`` — the
     temp holds the COMPLETE new content, so recovering from it is
-    always forward, never torn)."""
+    always forward, never torn). Missing parent directories are
+    created on both branches (Hadoop's ``create`` does so itself)."""
     if not is_uri(path):
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             f.write(text)
@@ -172,13 +176,17 @@ def _is_unsupported_fs(exc: Exception) -> bool:
 
 
 def remove(path: str) -> None:
+    """Delete a file or a whole directory tree; a missing path is a
+    no-op."""
     if not is_uri(path):
-        if os.path.exists(path):
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif os.path.exists(path):
             os.remove(path)
         return
     _, fs, p = _hfs(path)
     if fs.exists(p):
-        fs.delete(p, False)
+        fs.delete(p, True)
 
 
 def child_dirs(path: str) -> "list[str]":

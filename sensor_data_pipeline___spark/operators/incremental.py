@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sensor_data_pipeline___spark.operators import _fsio
 from sensor_data_pipeline___spark.operators.gold import silver_to_gold
 from sensor_data_pipeline___spark.operators.silver import bronze_to_silver
 from sensor_data_pipeline___spark.warehouse import BRONZE, GOLD, SILVER, Warehouse
@@ -202,15 +203,13 @@ def run_pipeline(
         ]
     if not days:
         return 0, 0
-    # cached_schema: the streaming loop is the table's sole writer, so
-    # the per-trigger mergeSchema footer job (the one read cost that
-    # grows with silver's file count) is replaced by the recorded
-    # write schema — the catalog-metadata emulation (see Warehouse.read)
-    existing = wh.read(SILVER, cached_schema=True)
+    # the read takes silver's schema from the table's record, so it
+    # launches no Spark job (see Warehouse.read)
+    existing = wh.read(SILVER)
     # checkpoint the merged days ONCE: the silver write, and the gold
     # recompute below, both replay the materialization — without it,
-    # gold would re-read silver (another mergeSchema footer job, a
-    # second pruned scan, and a replay of the anti-join) per trigger
+    # gold would re-read silver (a second pruned scan and a replay of
+    # the anti-join) per trigger
     merged = (
         existing.filter(F.col("reading_date").isin(days))  # pruned scan
         .join(new_silver.select("raw_id"), "raw_id", "left_anti")
@@ -256,8 +255,6 @@ def backfill_gold(wh: Warehouse, start_date: str, end_date: str) -> int:
 
     Returns the number of day-metric gold rows written.
     """
-    import shutil
-
     lo, hi = F.lit(start_date).cast("date"), F.lit(end_date).cast("date")
     silver = wh.read(SILVER).filter(
         F.col("reading_date").between(lo, hi)
@@ -283,9 +280,8 @@ def backfill_gold(wh: Warehouse, start_date: str, end_date: str) -> int:
         for r in stale.collect():
             day = str(r["reading_date"])
             if day not in live:
-                shutil.rmtree(
-                    os.path.join(wh.path(GOLD), f"reading_date={day}"),
-                    ignore_errors=True,
+                _fsio.remove(
+                    os.path.join(wh.path(GOLD), f"reading_date={day}")
                 )
     return n
 

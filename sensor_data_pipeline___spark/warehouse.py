@@ -15,17 +15,24 @@ overwrite is the MERGE stand-in: rewriting exactly the touched
 partitions reproduces dbt's incremental upsert because the partition
 key contains the merge key (gold) or the merged rows are fully
 recomputed per partition (silver).
+
+Each table root also holds ``_schema.json``, the table's schema record
+(see :meth:`Warehouse.read`): the one piece of catalog metadata a
+table format would keep that plain parquet lacks.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sensor_data_pipeline___spark import schemas
+from sensor_data_pipeline___spark.operators import _fsio
 
 BRONZE = "bronze/raw_readings"
 SILVER = "silver/stg_readings"
@@ -44,47 +51,45 @@ _SCHEMA = {
     GOLD: schemas.GOLD_SCHEMA,
 }
 
+#: The schema record's file name. The leading ``_`` keeps it out of
+#: Spark's file listing; ``_metadata``/``_common_metadata`` would not
+#: do, parquet schema inference reads those.
+_RECORD = "_schema.json"
+
 
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # table -> schema of the most recent write through THIS
-        # instance (the catalog-metadata emulation read(cached_schema=
-        # True) consumes)
-        self._write_schema: dict = {}
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        # local/posix path check; on HDFS/S3 this is a catalog lookup
-        # (S9 table-existence check, reference airflow/hooks/database.py:66-101)
-        return os.path.isdir(self.path(table))
+        # a directory check through _fsio, so URI roots (file:, hdfs://)
+        # resolve too (S9 table-existence check, reference
+        # airflow/hooks/database.py:66-101)
+        return _fsio.is_dir(self.path(table))
 
-    def read(self, table: str, cached_schema: bool = False) -> DataFrame:
+    def read(self, table: str) -> DataFrame:
         """Read a table; empty-with-schema if it doesn't exist yet.
 
-        ``mergeSchema`` is on: after an in-place schema evolution (new
-        parquet files carry a column the old files lack), the read
-        exposes the union schema with nulls for the old files — default
-        parquet inference samples ONE footer and would surface or drop
-        the new column at random. Cost note for 100 TB: merge-schema
-        inference is a distributed footer-read job over the table's
-        files; a catalog-backed table format (Delta/Iceberg, absent in
-        this container) records the evolved schema in metadata and
-        makes this free — this is the documented emulation tradeoff.
+        The schema comes from the table's record (``_schema.json`` at
+        the table root): the union-by-name of every schema written
+        through :meth:`write`. Reading it is driver-side file I/O, and
+        ``spark.read.schema(record)`` needs no inference, so the read
+        launches no Spark job. After an in-place schema evolution (new
+        files carry a column old files lack) the read exposes the union
+        schema with nulls for the old files, exactly as ``mergeSchema``
+        would. The record is on disk, so every ``Warehouse`` on the
+        same root sees the same schema.
 
-        ``cached_schema=True`` emulates exactly that catalog shortcut
-        for the per-trigger hot loop: if THIS Warehouse instance wrote
-        the table since construction, the read uses the recorded write
-        schema (no footer job at all — one whole Spark job saved per
-        trigger, and the footer job is the one per-batch cost that
-        GROWS with table file count). Falls back to mergeSchema when
-        no write has been recorded. Contract: only safe while this
-        instance is the table's sole writer (the streaming loop's
-        situation); an external writer's evolution is picked up on the
-        next non-cached read or write."""
+        A table without a record (one written before records existed,
+        a bronze table fed by the streaming writer, or a full refresh
+        that crashed between its commit and its record write) falls
+        back to ``mergeSchema``: a footer-read job over every file of
+        the table. Plain parquet inference would sample ONE footer and
+        surface or drop an evolved column at random."""
         if not self.exists(table):
             schema = _SCHEMA[table]
             part = _PARTITION_COL[table]
@@ -100,10 +105,9 @@ class Warehouse:
             )
 
             return local_df(self.spark, [], schema)
-        if cached_schema and table in self._write_schema:
-            return self.spark.read.schema(
-                self._write_schema[table]
-            ).parquet(self.path(table))
+        record = self._record(table)
+        if record is not None:
+            return self.spark.read.schema(record).parquet(self.path(table))
         return self.spark.read.option("mergeSchema", "true").parquet(
             self.path(table)
         )
@@ -121,7 +125,16 @@ class Warehouse:
         file — the analog of the reference's composite
         ``(reading_date, metric_name)`` index (stg_readings.sql:18-21):
         partition pruning covers the date, parquet row-group min/max
-        stats then skip by metric."""
+        stats then skip by metric.
+
+        Schema record: a normal write unions ``df``'s schema into the
+        record BEFORE the data commits, so a crash in between can only
+        expose an all-null column, never hide data; a column whose type
+        conflicts with the record raises here, before any data is
+        written. A ``wipe`` deletes the whole table directory, record
+        included, so its record is written AFTER the commit and
+        replaces the old one (a column the refresh dropped disappears,
+        as under ``mergeSchema``)."""
         part = _PARTITION_COL[table]
         if part not in df.columns:
             if table == BRONZE:
@@ -130,6 +143,8 @@ class Warehouse:
                 raise ValueError(f"{table}: missing partition column {part}")
         if table == SILVER:
             df = df.sortWithinPartitions(part, "metric_name")
+        if not wipe:
+            self._union_record(table, df.schema)
         conf = "spark.sql.sources.partitionOverwriteMode"
         prior = self.spark.conf.get(conf)
         if wipe:
@@ -138,23 +153,55 @@ class Warehouse:
             df.write.mode(mode).partitionBy(part).parquet(self.path(table))
         finally:
             self.spark.conf.set(conf, prior)
-        # record the write schema for read(cached_schema=True) — the
-        # catalog-metadata emulation. UNION with the previous record,
-        # never last-write-wins: a narrower write (an append without an
-        # evolved column) must not make later cached reads silently
-        # DROP that column — on-disk files still carry it, and a
-        # dropped column would be made permanent by the next
-        # partition-overwrite merge. Union-by-name is exactly what a
-        # catalog does for additive evolution.
-        prev = self._write_schema.get(table)
+        if wipe:
+            self._save_record(table, df.schema)
+
+    def _record_path(self, table: str) -> str:
+        return os.path.join(self.path(table), _RECORD)
+
+    def _record(self, table: str) -> "T.StructType | None":
+        path = self._record_path(table)
+        if not _fsio.exists(path):
+            return None
+        return T.StructType.fromJson(json.loads(_fsio.read_text(path)))
+
+    def _save_record(self, table: str, schema: T.StructType) -> None:
+        _fsio.write_text_atomic(self._record_path(table), schema.json())
+
+    def _union_record(self, table: str, schema: T.StructType) -> None:
+        """Union ``schema`` by name into the table's record; write the
+        record only when it is missing or the union adds a column. A
+        table that has data but no record first adopts its footers'
+        merged schema (one ``mergeSchema`` job, once), so the record
+        never hides a column an existing file carries."""
+        prev = self._record(table)
+        unrecorded = prev is None
+        if unrecorded and self.exists(table):
+            try:
+                prev = (
+                    self.spark.read.option("mergeSchema", "true")
+                    .parquet(self.path(table))
+                    .schema
+                )
+            except AnalysisException:
+                pass  # a directory without data files: nothing to adopt
         if prev is None:
-            self._write_schema[table] = df.schema
-        else:
-            known = {f.name for f in prev.fields}
-            self._write_schema[table] = T.StructType(
-                list(prev.fields)
-                + [f for f in df.schema.fields if f.name not in known]
-            )
+            prev = T.StructType()
+        known = {f.name: f.dataType for f in prev.fields}
+        for f in schema.fields:
+            # simpleString ignores nullability, which mergeSchema
+            # also merges freely
+            if f.name in known and (
+                known[f.name].simpleString() != f.dataType.simpleString()
+            ):
+                raise TypeError(
+                    f"{table}: column {f.name} is "
+                    f"{f.dataType.simpleString()}, the table has "
+                    f"{known[f.name].simpleString()}"
+                )
+        added = [f for f in schema.fields if f.name not in known]
+        if added or unrecorded:
+            self._save_record(table, T.StructType(list(prev.fields) + added))
 
     def append(self, table: str, df: DataFrame) -> None:
         self.write(table, df, mode="append")

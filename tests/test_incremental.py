@@ -521,11 +521,11 @@ def test_increment_fast_path_subset_days_never_deletes(spark, tmp_path):
     assert day2.count() == 2  # listed day landed normally
 
 
-def test_cached_schema_survives_narrower_append(spark, tmp_path):
-    """Review r8: the recorded write schema must be the UNION across
+def test_schema_record_survives_narrower_append(spark, tmp_path):
+    """Review r8: the table's schema record must be the UNION across
     writes, not last-write-wins — an append missing an evolved column
-    must not make cached reads drop that column (on-disk files still
-    carry it; a later merge would make the loss permanent)."""
+    must not make reads drop that column (on-disk files still carry
+    it; a later merge would make the loss permanent)."""
     from pyspark.sql import functions as F
 
     wh2 = Warehouse(spark, str(tmp_path / "wh"))
@@ -545,7 +545,37 @@ def test_cached_schema_survives_narrower_append(spark, tmp_path):
     )
     wh2.append(SILVER, narrow)
 
-    got = wh2.read(SILVER, cached_schema=True)
+    got = wh2.read(SILVER)
     assert "extra" in got.columns
     rows = {r.raw_id: r.extra for r in got.collect()}
     assert rows == {1: "x", 2: None}
+
+
+def test_backfill_gold_drops_stale_day_on_file_uri(spark, tmp_path):
+    """The warehouse on a ``file:`` URI root: table existence, the
+    schema record and backfill's stale-day drop all go through the
+    Hadoop FileSystem branch of operators/_fsio.py."""
+    from pyspark.sql import functions as F
+
+    from sensor_data_pipeline___spark.operators import _fsio
+    from sensor_data_pipeline___spark.warehouse import _RECORD
+
+    wh = Warehouse(spark, "file:" + str(tmp_path / "wh_uri"))
+    assert _fsio.is_uri(wh.root)
+    day2 = ["1650028217 Voltage 2.0", "1650028218 Current 10.0"]  # 2022-04-15
+    _ingest(spark, wh, GOLDEN_LINES + day2)
+    assert incremental.run_pipeline(wh) == (6, 2)
+    for table in (BRONZE, SILVER, GOLD):
+        assert wh.exists(table)
+        assert _fsio.exists(wh.path(table) + "/" + _RECORD)
+
+    # 04-15 loses its Current rows in silver: its gold day goes stale
+    d2 = F.lit("2022-04-15").cast("date")
+    patched = wh.read(SILVER).filter(
+        (F.col("reading_date") == d2) & (F.col("metric_name") == "Voltage")
+    )
+    wh.write(SILVER, patched.localCheckpoint(eager=True))
+    assert incremental.backfill_gold(wh, "2022-04-14", "2022-04-15") == 1
+    gold = {str(r["reading_date"]) for r in wh.read(GOLD).collect()}
+    assert gold == {"2022-04-14"}
+    assert not _fsio.exists(wh.path(GOLD) + "/reading_date=2022-04-15")

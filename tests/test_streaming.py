@@ -911,8 +911,9 @@ def test_sensor_steady_state_batch_job_count_pinned(spark, dirs):
     latency floor. Steady state runs FIVE actions — gate aggregate,
     bronze write, merge checkpoint, silver write, gold write — which
     AQE splits into at most 11 jobs on this shape (each shuffle stage
-    materializes as its own job; the silver read uses the cached
-    write schema, so NO per-trigger mergeSchema footer job).
+    materializes as its own job; the silver read takes its schema from
+    the table's schema record, so NO per-trigger mergeSchema footer
+    job).
     Pin the ceiling so a regression that re-introduces a per-trigger
     materialization (watermark scan, days distinct+collect, gold
     count) fails structurally instead of showing up as a silent p50
