@@ -1,9 +1,15 @@
-"""Shared write-mode pinning for the persisted index stores.
+"""Shared write-mode pinning for every partitioned overwrite.
 
-The session default is DYNAMIC partition overwrite (session.py — the
-right default for the warehouse's day-partition merges), but the two
-index write classes need opposite pins, both scoped to the write and
-restored after:
+The engine's session default is DYNAMIC partition overwrite
+(session.py), but a caller's session may hold Spark's own default,
+STATIC, under which a partitioned "overwrite" first drops every
+partition of the table. So no write relies on the session: each pins
+the mode it needs with :func:`overwrite_mode`, scoped to the write and
+restored after. The warehouse writes do (``Warehouse.write`` pins
+dynamic for its day-partition merges and static for a ``wipe``;
+``Warehouse.compact`` and the streams' ``batch_id`` bronze and
+changelog writes pin dynamic), and so do the persisted index stores, whose two write
+classes need opposite pins:
 
 - FULL-STORE writes (``save_*_index``, compact/retrain generation
   writes) must be STATIC: under dynamic overwrite a partitioned

@@ -47,6 +47,18 @@ def _scalar_watermark(df: DataFrame, col: str):
     return df.agg(F.max(col)).first()[0]
 
 
+def _upsert(existing_days: DataFrame, new_silver: DataFrame) -> DataFrame:
+    """M1 merge on ``raw_id`` within the touched days: keep the
+    existing rows that are NOT re-processed (left-anti on the merge
+    key), new rows win. ``allowMissingColumns``: after a silver schema
+    evolution, surviving rows keep their evolved columns and re-derived
+    rows carry null there (bronze_to_silver only produces the declared
+    columns)."""
+    return existing_days.join(
+        new_silver.select("raw_id"), "raw_id", "left_anti"
+    ).unionByName(new_silver, allowMissingColumns=True)
+
+
 def run_silver(wh: Warehouse, full_refresh: bool = False) -> int:
     """Bronze → silver incremental run. Returns rows written."""
     bronze = wh.read(BRONZE).select("id", "raw_line", "ingested_at")
@@ -73,40 +85,20 @@ def run_silver(wh: Warehouse, full_refresh: bool = False) -> int:
     if n == 0:
         return 0  # no new data — a re-run is a no-op (M1 idempotency)
 
-    # M1 merge on raw_id within touched partitions: keep existing rows
-    # that are NOT re-processed (left-anti on the merge key), new rows win.
     affected = new_silver.select("reading_date").distinct()
     existing_affected = existing.join(F.broadcast(affected), "reading_date", "left_semi")
-    # allowMissingColumns: after a silver schema evolution, surviving
-    # rows keep their evolved columns and re-derived rows carry null
-    # there (bronze_to_silver only produces the declared columns)
-    merged = existing_affected.join(
-        new_silver.select("raw_id"), "raw_id", "left_anti"
-    ).unionByName(new_silver, allowMissingColumns=True)
-    wh.write(SILVER, merged)  # dynamic overwrite of touched partitions only
+    # dynamic overwrite of touched partitions only
+    wh.write(SILVER, _upsert(existing_affected, new_silver))
     return n
 
 
-def run_gold(
-    wh: Warehouse,
-    full_refresh: bool = False,
-    affected_days: "list | None" = None,
-) -> int:
-    """Silver → gold incremental run. Returns days (re)computed.
-
-    ``affected_days`` (the streaming fast path) hands the touched days
-    as a driver-side literal list: the calculated_at watermark scan and
-    the processed_at semi-join both disappear, and the IN-filter on the
-    partition column prunes the silver scan to exactly those days'
-    partitions — in the micro-batch loop that is two table-scan jobs
-    per trigger replaced by one pruned scan."""
+def run_gold(wh: Warehouse, full_refresh: bool = False) -> int:
+    """Silver → gold incremental run: recompute, from all their silver
+    rows, the days with any silver row newer than gold's
+    ``calculated_at`` watermark. Returns days (re)computed."""
     silver = wh.read(SILVER)
 
-    if affected_days is not None and not full_refresh and wh.exists(GOLD):
-        if not affected_days:
-            return 0
-        silver = silver.filter(F.col("reading_date").isin(affected_days))
-    elif not full_refresh and wh.exists(GOLD):
+    if not full_refresh and wh.exists(GOLD):
         existing = wh.read(GOLD)
         wm = _scalar_watermark(existing, "calculated_at")
         if wm is not None:
@@ -134,105 +126,75 @@ def run_pipeline(
     full_refresh: bool = False,
     increment: "DataFrame | None" = None,
     affected_days: "list | None" = None,
-    want_counts: bool = True,
 ) -> tuple[int, int]:
     """The hourly DAG body: staging then marts, ordinary call order
-    (reference airflow/dags/sensor_data_pipeline.py:88,101).
+    (reference airflow/dags/sensor_data_pipeline.py:88,101). Without
+    ``increment`` (the watermark path) returns (silver rows, gold
+    days) written.
 
-    ``increment`` is the streaming fast path (VERDICT r6 directive #6):
-    the micro-batch loop already HOLDS the exact new bronze rows, so
-    re-deriving them from the table — a processed_at watermark scan of
-    silver plus a bronze re-read that grows with batch history — is
-    pure fixed overhead per trigger. With the increment handed in, the
-    parse consumes it directly, the touched days become a driver-side
-    literal list (bounded by the batch's distinct dates), and both the
-    silver merge and the gold recompute prune to those days'
-    PARTITIONS. Semantically identical to the watermark path by
-    construction: the increment IS precisely the set of rows past the
-    watermark (each batch merges to silver before its checkpoint
-    commits; a replayed batch re-presents the same deterministic
-    raw_ids and the merge upserts them idempotently — M1).
+    ``increment`` is the streaming fast path: the micro-batch loop
+    already HOLDS the exact new bronze rows, so the parse consumes
+    them directly instead of re-deriving them from the table (a
+    processed_at watermark scan of silver plus a bronze re-read that
+    grows with batch history), and both the silver merge and the gold
+    recompute prune to the touched days' PARTITIONS. Semantically
+    identical to the watermark path: the increment IS precisely the
+    set of rows past the watermark (each batch merges to silver before
+    its checkpoint commits; a replayed batch re-presents the same
+    deterministic raw_ids and the merge upserts them idempotently —
+    M1). Requires silver to already hold everything except the
+    increment, which the streaming loop guarantees.
 
-    Requires silver to already hold everything except the increment,
-    which the streaming loop guarantees; callers without that
-    guarantee use the watermark path (increment=None).
+    ``affected_days`` is required with ``increment``: the increment's
+    distinct reading dates, which the streaming gate derives in its
+    own scan. A SUPERSET of the true touched days is safe (an
+    untouched day in the list is rewritten byte-identically and its
+    gold recomputed to the same values). A SUBSET is safe too, but
+    lossy for the increment: out-of-list increment rows are IGNORED
+    this run (their days' existing partitions are untouched) and must
+    be re-presented with their day listed to land.
 
-    ``affected_days`` (optional, with ``increment``) lets the caller
-    hand in the increment's distinct reading dates when it already has
-    them — the streaming gate aggregation derives them in its own
-    scan, saving the distinct+collect job here. A SUPERSET of the true
-    touched days is safe (an untouched day in the list is rewritten
-    byte-identically and its gold recomputed to the same values);
-    days with no valid rows cost one redundant partition rewrite.
-    A SUBSET is safe too, but lossy for the increment: the parse is
-    restricted to the listed days, so out-of-list increment rows are
-    IGNORED this run (their days' existing partitions are untouched
-    — never overwritten with increment-only rows) and must be
-    re-presented with their day listed to land.
-
-    ``want_counts=False`` (increment path only) skips the final
-    silver-row count — one whole Spark action per trigger that exists
-    only for the return value; callers that ignore the counts (the
-    streaming loop) get ``-1`` as the silver count instead."""
+    The increment path fuses the gold aggregate into its write and
+    counts nothing: it returns ``(-1, -1)`` (``(0, 0)`` for an empty
+    day list, which writes nothing)."""
+    if increment is not None and affected_days is None:
+        raise ValueError("run_pipeline: an increment needs its affected_days")
     if increment is None or full_refresh or not wh.exists(SILVER):
         return run_silver(wh, full_refresh), run_gold(wh, full_refresh)
+    if not affected_days:
+        return 0, 0
 
-    bronze = increment.select("id", "raw_line", "ingested_at")
     # LAZY on purpose: the merged checkpoint below is the single
     # materialization — parsing inside it avoids a dedicated parse job
-    # per trigger (the count at the end re-reads the caller's cached
-    # increment, a fraction of a full parse job)
-    new_silver = bronze_to_silver(bronze)
-    if affected_days is not None:
-        days = affected_days
-        # CONTRACT GUARD: the merged frame is written with dynamic
-        # partition overwrite, so any increment row whose day is NOT
-        # in the caller's list would otherwise land in `merged` and
-        # OVERWRITE that day's partition with increment-only rows —
-        # silently deleting the day's existing silver. Restricting the
-        # parse to the listed days makes a subset list non-destructive:
-        # out-of-list increment rows are IGNORED this run (their days'
-        # partitions untouched), and a superset list stays exactly as
-        # documented. Callers that can't guarantee a superset should
-        # pass affected_days=None and pay the distinct scan.
-        new_silver = new_silver.filter(F.col("reading_date").isin(days))
-    else:
-        days = [
-            r["reading_date"]
-            for r in new_silver.select("reading_date").distinct().collect()
-        ]
-    if not days:
-        return 0, 0
+    # per trigger.
+    # CONTRACT GUARD: the merged frame is written with dynamic
+    # partition overwrite, so any increment row whose day is NOT in
+    # the caller's list would otherwise land in `merged` and OVERWRITE
+    # that day's partition with increment-only rows — silently
+    # deleting the day's existing silver. Restricting the parse to the
+    # listed days makes a subset list non-destructive.
+    new_silver = bronze_to_silver(
+        increment.select("id", "raw_line", "ingested_at")
+    ).filter(F.col("reading_date").isin(affected_days))
     # the read takes silver's schema from the table's record, so it
     # launches no Spark job (see Warehouse.read)
     existing = wh.read(SILVER)
-    # checkpoint the merged days ONCE: the silver write, and the gold
-    # recompute below, both replay the materialization — without it,
+    # checkpoint the merged days ONCE: the silver write and the gold
+    # recompute below both replay the materialization — without it,
     # gold would re-read silver (a second pruned scan and a replay of
     # the anti-join) per trigger
-    merged = (
-        existing.filter(F.col("reading_date").isin(days))  # pruned scan
-        .join(new_silver.select("raw_id"), "raw_id", "left_anti")
-        .unionByName(new_silver, allowMissingColumns=True)
+    merged = _upsert(
+        existing.filter(F.col("reading_date").isin(affected_days)),  # pruned
+        new_silver,
     ).localCheckpoint(eager=True)
     wh.write(SILVER, merged)  # dynamic overwrite of touched partitions
-    # gold for the touched days straight from the frame just written —
-    # identical input to run_gold(affected_days=days) re-reading the
-    # table, without the table read
-    new_gold = silver_to_gold(merged)
-    if not want_counts:
-        # counts unwanted (the streaming loop): the day aggregate is a
-        # handful of rows over the checkpointed merge, so fold it into
-        # the write action itself — no checkpoint, no count job. An
-        # empty aggregate writes NO partitions under dynamic overwrite
-        # (a no-op), so the g>0 guard isn't needed either.
-        wh.write(GOLD, new_gold)
-        return -1, -1
-    new_gold = new_gold.localCheckpoint(eager=True)
-    g = int(new_gold.count())
-    if g > 0:
-        wh.write(GOLD, new_gold)
-    return int(new_silver.count()), g
+    # gold for the touched days straight from the frame just written,
+    # folded into the write action itself: the day aggregate is a
+    # handful of rows over the checkpointed merge, so it needs no
+    # checkpoint and no count job. An empty aggregate writes NO
+    # partitions under dynamic overwrite (a no-op).
+    wh.write(GOLD, silver_to_gold(merged))
+    return -1, -1
 
 
 def backfill_gold(wh: Warehouse, start_date: str, end_date: str) -> int:

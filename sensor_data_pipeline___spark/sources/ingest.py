@@ -13,8 +13,9 @@ src/db/repositories/readings.py:9-22:
 
 Scale notes: validation is a single aggregate over the batch (one Spark
 job, map-side combined count — no collect of data rows). The surrogate
-id uses ``monotonically_increasing_id()`` offset by the current max —
-unique and increasing, not dense, which is all the reference needs (the
+id uses ``monotonically_increasing_id()``, which the caller offsets by
+the bronze table's current max id (``Warehouse.max_id``) — unique and
+increasing, not dense, which is all the reference needs (the
 id's only downstream use is the M1 dedup key). At 100 TB the bronze
 append is an atomic directory commit per batch (Spark's file-commit
 protocol), matching the reference's one-transaction-per-POST guarantee.
@@ -24,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline___spark.functions import parsing
@@ -45,19 +46,31 @@ def lines_df(spark: SparkSession, lines: list[str]) -> DataFrame:
     return spark.createDataFrame([(ln,) for ln in lines], "raw_line string")
 
 
+def flag_lines(raw: DataFrame) -> tuple[DataFrame, Column]:
+    """The F6 gate flags. Returns ``raw``'s lines with their ``_blank``
+    and ``_valid`` flags, and the aggregate column ``invalid``: the
+    count of non-blank lines that fail the gate. Callers fold that
+    column into their own single aggregate job."""
+    flagged = raw.select(
+        "raw_line",
+        parsing.is_blank(F.col("raw_line")).alias("_blank"),
+        parsing.gate_valid(F.col("raw_line")).alias("_valid"),
+    )
+    invalid = F.sum(
+        F.when(~F.col("_blank") & ~F.col("_valid"), 1).otherwise(0)
+    ).alias("invalid")
+    return flagged, invalid
+
+
 def validate_batch(raw: DataFrame) -> tuple[DataFrame, int, int]:
     """Apply the ingest gate. Returns (valid_rows, n_invalid, n_blank).
 
     One aggregate pass computes both counts; the returned DataFrame is
     the non-blank subset (valid iff n_invalid == 0).
     """
-    flagged = raw.select(
-        "raw_line",
-        parsing.is_blank(F.col("raw_line")).alias("_blank"),
-        parsing.gate_valid(F.col("raw_line")).alias("_valid"),
-    )
+    flagged, invalid = flag_lines(raw)
     counts = flagged.agg(
-        F.sum(F.when(~F.col("_blank") & ~F.col("_valid"), 1).otherwise(0)).alias("invalid"),
+        invalid,
         F.sum(F.when(F.col("_blank"), 1).otherwise(0)).alias("blank"),
     ).first()
     n_invalid = int(counts["invalid"] or 0)
@@ -65,33 +78,24 @@ def validate_batch(raw: DataFrame) -> tuple[DataFrame, int, int]:
     return flagged.filter(~F.col("_blank")).select("raw_line"), n_invalid, n_blank
 
 
-def stamp_bronze(valid: DataFrame, id_offset: int = 0) -> DataFrame:
-    """Attach surrogate id (S6) and ingest timestamp (S7)."""
+def stamp_bronze(valid: DataFrame) -> DataFrame:
+    """Attach surrogate id (S6, from 1) and ingest timestamp (S7)."""
     return valid.select(
-        (F.monotonically_increasing_id() + F.lit(id_offset) + 1).alias("id"),
+        (F.monotonically_increasing_id() + 1).alias("id"),
         F.col("raw_line"),
         F.current_timestamp().alias("ingested_at"),
     )
 
 
 def ingest_batch(
-    spark: SparkSession, lines: list[str], bronze_path: str | None = None
+    spark: SparkSession, lines: list[str]
 ) -> tuple[DataFrame, IngestResult]:
-    """Full POST /data semantics. Returns the bronze rows (written to
-    ``bronze_path`` if given) or raises :class:`IngestRejected`."""
+    """Full POST /data semantics. Returns the bronze rows, ids from 1
+    (the caller offsets them past the table's max id before
+    appending), or raises :class:`IngestRejected`."""
     raw = lines_df(spark, lines)
     valid, n_invalid, n_blank = validate_batch(raw)
     if n_invalid > 0:
         raise IngestRejected(f"{n_invalid} invalid line(s); batch rejected")
-    id_offset = 0
-    if bronze_path is not None:
-        try:
-            existing = spark.read.parquet(bronze_path)
-            id_offset = existing.agg(F.max("id")).first()[0] or 0
-        except Exception:
-            id_offset = 0  # first batch — no bronze dir yet
-    bronze = stamp_bronze(valid, id_offset)
-    if bronze_path is not None:
-        bronze.write.mode("append").parquet(bronze_path)
     n_accepted = len(lines) - n_blank
-    return bronze, IngestResult(accepted=n_accepted, skipped=n_blank)
+    return stamp_bronze(valid), IngestResult(accepted=n_accepted, skipped=n_blank)

@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline___spark.functions import parsing
 from sensor_data_pipeline___spark.operators import incremental
+from sensor_data_pipeline___spark.operators._writes import overwrite_mode
+from sensor_data_pipeline___spark.sources import ingest
 from sensor_data_pipeline___spark.warehouse import BRONZE, Warehouse
 
 #: Streaming bronze surrogate ids: ``batch_id * _ID_STRIDE + row_number``.
@@ -86,17 +88,16 @@ def _ingest_batch_fn(wh: Warehouse, reject_dir: str | None):
         # otherwise — one source materialization per micro-batch, not
         # three. Unpersisted in the finally; memory is micro-batch-
         # bounded by the trigger's admission control.
-        flagged = raw_lines.select(
-            "raw_line",
-            parsing.is_blank(F.col("raw_line")).alias("_blank"),
-            parsing.gate_valid(F.col("raw_line")).alias("_valid"),
-        ).persist()
+        flagged, invalid = ingest.flag_lines(raw_lines)
+        flagged = flagged.persist()
         try:
-            _process_flagged(flagged, batch_id)
+            _process_flagged(flagged, invalid, batch_id)
         finally:
             flagged.unpersist()
 
-    def _process_flagged(flagged: DataFrame, batch_id: int) -> None:
+    def _process_flagged(
+        flagged: DataFrame, invalid: Column, batch_id: int
+    ) -> None:
         # one gate scan yields BOTH the all-or-nothing verdict and the
         # batch's distinct reading dates (collect_set skips the nulls
         # from blank/invalid lines) — handing the days to the DAG body
@@ -105,9 +106,7 @@ def _ingest_batch_fn(wh: Warehouse, reject_dir: str | None):
         ts_str, _name, _val = parsing.silver_tokens(F.col("raw_line"))
         day = F.to_date(F.timestamp_seconds(ts_str.cast("long")))
         counts = flagged.agg(
-            F.sum(F.when(~F.col("_blank") & ~F.col("_valid"), 1).otherwise(0)).alias(
-                "invalid"
-            ),
+            invalid,
             F.collect_set(
                 F.when(~F.col("_blank") & F.col("_valid"), day)
             ).alias("days"),
@@ -128,24 +127,24 @@ def _ingest_batch_fn(wh: Warehouse, reject_dir: str | None):
             F.current_timestamp().alias("ingested_at"),
             F.lit(batch_id).alias("batch_id"),
         )
-        # dynamic partitionOverwriteMode (session default): only the
-        # batch_id=N partition present in this frame is replaced
         # persisted: the bronze write and the increment fast path each
         # consume these rows — one materialization, not two parses
         bronze_rows = bronze_rows.persist()
         try:
-            bronze_rows.write.mode("overwrite").partitionBy("batch_id").parquet(
-                wh.path(BRONZE)
-            )
+            # dynamic partition overwrite, pinned whatever the session
+            # default: only the batch_id=N partition present in this
+            # frame is replaced
+            with overwrite_mode(bronze_rows.sparkSession, "dynamic"):
+                bronze_rows.write.mode("overwrite").partitionBy(
+                    "batch_id"
+                ).parquet(wh.path(BRONZE))
             # hand the in-hand increment AND its days to the DAG body:
             # skips the silver/gold watermark scans, the bronze table
             # re-read (which grows with batch history), and the days
             # distinct+collect — the per-trigger fixed-overhead cut of
             # VERDICT r6 directive #6
             incremental.run_pipeline(
-                wh, increment=bronze_rows,
-                affected_days=list(counts["days"]),
-                want_counts=False,  # return value unused — skip the job
+                wh, increment=bronze_rows, affected_days=list(counts["days"])
             )
         finally:
             bronze_rows.unpersist()
@@ -528,20 +527,21 @@ def _reading_value_stream(
 def _write_changelog_batch(
     batch_df: DataFrame, batch_id: int, out_dir: str
 ) -> None:
-    """One changelog micro-batch body: dynamic overwrite of the batch's
-    own ``batch_id=N`` partition — the unit a checkpoint replay
+    """One changelog micro-batch body: dynamic overwrite (pinned) of the
+    batch's own ``batch_id=N`` partition — the unit a checkpoint replay
     re-executes, exposed at module level so the replay contract is
     directly testable."""
-    batch_df.withColumn(
-        "batch_id", F.lit(batch_id).cast("long")
-    ).write.mode("overwrite").partitionBy("batch_id").parquet(out_dir)
+    with overwrite_mode(batch_df.sparkSession, "dynamic"):
+        batch_df.withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
+        ).write.mode("overwrite").partitionBy("batch_id").parquet(out_dir)
 
 
 def _append_changelog(updated: DataFrame, out_dir: str, checkpoint_dir: str):
     """Update-mode rows can't go straight to a parquet sink (append-
     only); foreachBatch lands them as a changelog. IDEMPOTENT per
     micro-batch: each batch overwrites its own ``batch_id=N`` partition
-    (dynamic partition overwrite, session default), so an
+    (dynamic partition overwrite, pinned for the write), so an
     at-least-once replay — a failure between the parquet write and the
     checkpoint commit — REPLACES its rows instead of duplicating them,
     preserving the one-row-per-(batch, key) invariant the soak test
@@ -558,13 +558,6 @@ def _append_changelog(updated: DataFrame, out_dir: str, checkpoint_dir: str):
         .trigger(availableNow=True)
         .start()
     )
-
-
-#: Output schema shared by both EWMA drift implementations.
-_EWMA_SCHEMA = (
-    "metric_name string, n_readings long, batch_mean double, "
-    "ewma double, drift double"
-)
 
 
 def ewma_drift_stream(
@@ -588,9 +581,7 @@ def ewma_drift_stream(
     State is one fixed-width (n, ewma) tuple per live metric key,
     Arrow-batched per key group; the shuffle key is metric_name, so a
     high-cardinality keyspace spreads across executors while per-key
-    state stays O(1). See :func:`ewma_drift_stream_tws` for the
-    Spark-4 ``transformWithState`` formulation with RocksDB state and
-    TTL key expiry.
+    state stays O(1).
 
     Reference analog: the drift/alerting layer over the reference's
     hourly gold rollup (airflow/dags/readings_hourly.py) — not a
@@ -629,129 +620,15 @@ def ewma_drift_stream(
 
     updated = readings.groupBy("metric_name").applyInPandasWithState(
         update,
-        outputStructType=_EWMA_SCHEMA,
+        outputStructType=(
+            "metric_name string, n_readings long, batch_mean double, "
+            "ewma double, drift double"
+        ),
         stateStructType="n long, ewma double",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return _append_changelog(updated, out_dir, checkpoint_dir)
-
-
-def _tws_available() -> bool:
-    """``transformWithStateInPandas`` ships its driver/worker protocol
-    over protobuf; without the ``protobuf`` package the streaming
-    Python runner crashes at query start."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def ewma_drift_stream_tws(
-    spark: SparkSession,
-    drop_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    alpha: float = 0.3,
-    state_ttl_ms: int | None = None,
-):
-    """:func:`ewma_drift_stream` on ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful API (typed state variables on the
-    RocksDB state store, the successor to ``applyInPandasWithState``).
-
-    Same algorithm and output schema as :func:`ewma_drift_stream`
-    (their parity is pinned by test when the API's protobuf dependency
-    is installed). What the newer API adds for the 100 TB posture:
-
-    - **RocksDB state** — per-key state lives off-heap with incremental
-      checkpointing, not in executor JVM heap.
-    - **TTL key expiry** (``state_ttl_ms``) — keys that stop reporting
-      expire from the store, the unbounded-keyspace guard (per-device
-      metrics with device churn) that ``applyInPandasWithState`` can
-      only approximate with manual timeout handling. TTL requires
-      processing-time semantics, so the query runs in
-      ``timeMode="ProcessingTime"``.
-
-    Raises ``ImportError`` where the ``protobuf`` package is absent
-    (this container): the API's streaming Python runner needs it.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if not _tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package; "
-            "use ewma_drift_stream (applyInPandasWithState) instead"
-        )
-
-    readings = _reading_value_stream(spark, drop_dir)
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ewma", "n long, ewma double", ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            batch_n, batch_sum = 0, 0.0
-            for pdf in rows:
-                batch_n += len(pdf)
-                batch_sum += float(pdf["metric_value"].sum())
-            if batch_n == 0:
-                return
-            batch_mean = batch_sum / batch_n
-            prior = self._state.get()  # None on first batch / after TTL
-            if prior is None:
-                n, ewma, drift = batch_n, batch_mean, 0.0
-            else:
-                n = prior[0] + batch_n
-                drift = abs(batch_mean - prior[1])
-                ewma = alpha * batch_mean + (1.0 - alpha) * prior[1]
-            self._state.update((n, ewma))
-            yield pd.DataFrame(
-                {
-                    "metric_name": [key[0]],
-                    "n_readings": [n],
-                    "batch_mean": [batch_mean],
-                    "ewma": [ewma],
-                    "drift": [drift],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    updated = readings.groupBy("metric_name").transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=_EWMA_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-    # transformWithState requires the RocksDB state store provider
-    # (bundled rocksdbjni); HDFSBackedStateStoreProvider is rejected.
-    # Streaming queries snapshot session confs at .start(), so the
-    # session-level value is restored immediately after — mirroring
-    # Warehouse.write — rather than silently changing the provider for
-    # every stream started later on the shared session.
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(conf, None)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        return _append_changelog(updated, out_dir, checkpoint_dir)
-    finally:
-        if prior is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prior)
 
 
 def corpus_ingest_stream(
@@ -1154,12 +1031,6 @@ def corpus_neardup_batch_fn(
                 ingest_key=key,
                 prune_max_nodes=4096,
             )
-        # DYNAMIC, pinned: a replay overwrites only its own
-        # ingest_batch partition (see operators/_writes.py)
-        from sensor_data_pipeline___spark.operators._writes import (
-            overwrite_mode,
-        )
-
         clean = survivors
         if tokenizer_merges is not None:
             from sensor_data_pipeline___spark.operators.text import (
@@ -1167,6 +1038,8 @@ def corpus_neardup_batch_fn(
             )
 
             clean = stamp_bpe_token_count(clean, tokenizer_merges, "text")
+        # DYNAMIC, pinned: a replay overwrites only its own
+        # ingest_batch partition (see operators/_writes.py)
         with overwrite_mode(spark, "dynamic"):
             (
                 clean.withColumn("ingest_batch", F.lit(key))

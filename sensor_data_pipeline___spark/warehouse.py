@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from sensor_data_pipeline___spark import schemas
 from sensor_data_pipeline___spark.operators import _fsio
+from sensor_data_pipeline___spark.operators._writes import overwrite_mode
 
 BRONZE = "bronze/raw_readings"
 SILVER = "silver/stg_readings"
@@ -115,11 +116,12 @@ class Warehouse:
     def write(
         self, table: str, df: DataFrame, mode: str = "overwrite", wipe: bool = False
     ) -> None:
-        """Write with the table's partition layout. ``overwrite`` +
-        dynamic partitionOverwriteMode (session default) rewrites only
-        the partitions present in ``df`` — the MERGE emulation.
-        ``wipe=True`` forces static overwrite (drop ALL existing
-        partitions first) — the full-refresh path (M5).
+        """Write with the table's partition layout. ``overwrite``
+        pins dynamic partitionOverwriteMode for the write, whatever the
+        session default, so it rewrites only the partitions present in
+        ``df`` — the MERGE emulation. ``wipe=True`` pins static
+        overwrite instead (drop ALL existing partitions first) — the
+        full-refresh path (M5).
 
         Silver rows are sorted by ``metric_name`` within each partition
         file — the analog of the reference's composite
@@ -145,14 +147,9 @@ class Warehouse:
             df = df.sortWithinPartitions(part, "metric_name")
         if not wipe:
             self._union_record(table, df.schema)
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        prior = self.spark.conf.get(conf)
-        if wipe:
-            self.spark.conf.set(conf, "static")
-        try:
+        # pinned on the frame's session: the write runs under it
+        with overwrite_mode(df.sparkSession, "static" if wipe else "dynamic"):
             df.write.mode(mode).partitionBy(part).parquet(self.path(table))
-        finally:
-            self.spark.conf.set(conf, prior)
         if wipe:
             self._save_record(table, df.schema)
 
@@ -249,9 +246,10 @@ class Warehouse:
         at the target size, so large partitions still produce multiple
         right-sized files. Only partitions whose average file size is
         below ``small_file_threshold × target`` AND holding >1 file are
-        rewritten (dynamic partition overwrite — untouched partitions
-        keep their files byte-identical, so the rewrite is idempotent
-        and re-run-safe, the same guarantee as the M1/M2 merges).
+        rewritten (dynamic partition overwrite, pinned for the rewrite
+        like :meth:`write` — untouched partitions keep their files
+        byte-identical, so the rewrite is idempotent and re-run-safe,
+        the same guarantee as the M1/M2 merges).
 
         Skew note: one task per fragmented partition is the safe
         default while partitions are partition-pruning-sized (the
@@ -287,12 +285,13 @@ class Warehouse:
         if table == SILVER:
             # preserve the composite-index analog (see write())
             out = out.sortWithinPartitions(part_col, "metric_name")
-        (
-            out.write.mode("overwrite")
-            .partitionBy(part_col)
-            .option("maxRecordsPerFile", max_records)
-            .parquet(self.path(table))
-        )
+        with overwrite_mode(out.sparkSession, "dynamic"):
+            (
+                out.write.mode("overwrite")
+                .partitionBy(part_col)
+                .option("maxRecordsPerFile", max_records)
+                .parquet(self.path(table))
+            )
         return sorted(frag)
 
 

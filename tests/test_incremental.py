@@ -368,10 +368,10 @@ def test_silver_merge_after_evolution(spark, wh):
 
 def test_increment_fast_path_matches_watermark_path(spark, tmp_path):
     """VERDICT r6 directive #6: the streaming fast path (increment +
-    affected_days handed in, no watermark scans) must leave silver and
-    gold in exactly the state the watermark path produces, across
-    multi-batch, multi-day, and late-data sequences — including the
-    superset-days tolerance."""
+    affected_days handed in, no watermark scans, gold fused into its
+    write) must leave silver and gold in exactly the state the
+    watermark path produces, across multi-batch, multi-day, and
+    late-data sequences — including the superset-days tolerance."""
     from pyspark.sql import functions as F
 
     batches = [
@@ -405,10 +405,9 @@ def test_increment_fast_path_matches_watermark_path(spark, tmp_path):
                         ).alias("d")
                     ).distinct().collect()
                 ]
-                n, g = incremental.run_pipeline(
+                assert incremental.run_pipeline(
                     wh2, increment=inc, affected_days=days
-                )
-                assert n == len(lines)
+                ) == (-1, -1)
             time.sleep(1.05)  # watermark separation between batches
         silver = sorted(
             (r["raw_id"], r["metric_name"], r["metric_value"],
@@ -430,7 +429,7 @@ def test_increment_fast_path_matches_watermark_path(spark, tmp_path):
 
 
 def test_increment_fast_path_empty_gold_write_is_noop(spark, tmp_path):
-    """want_counts=False folds the gold aggregate into the write with
+    """The increment path folds the gold aggregate into the write with
     no emptiness guard — an empty aggregate under dynamic partition
     overwrite must write NO partitions and leave existing gold
     untouched (the invariant the fusion relies on)."""
@@ -454,7 +453,6 @@ def test_increment_fast_path_empty_gold_write_is_noop(spark, tmp_path):
     n, g = incremental.run_pipeline(
         wh2, increment=b1,
         affected_days=[__import__("datetime").date(2022, 4, 15)],
-        want_counts=False,
     )
     assert (n, g) == (-1, -1)
     gold1 = wh2.read(GOLD).collect()
@@ -471,7 +469,8 @@ def test_increment_fast_path_subset_days_never_deletes(spark, tmp_path):
     with increment-only rows (the parse emitted them into the merged
     frame); the contract guard now restricts the parse to the listed
     days, so the unlisted day's partition is untouched and only the
-    listed day's rows land."""
+    listed day's rows land. An increment with no days list at all is
+    refused before anything is written."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -502,10 +501,12 @@ def test_increment_fast_path_subset_days_never_deletes(spark, tmp_path):
     )
     b1 = b1.withColumn("id", F.col("id") + wh2.max_id(BRONZE))
     wh2.append(BRONZE, b1)
+    with pytest.raises(ValueError, match="affected_days"):
+        incremental.run_pipeline(wh2, increment=b1)
+    assert wh2.read(SILVER).count() == 2
     incremental.run_pipeline(
         wh2, increment=b1,
         affected_days=[datetime.date(2022, 4, 15)],
-        want_counts=False,
     )
     silver = wh2.read(SILVER)
     after = sorted(

@@ -310,30 +310,6 @@ def test_ewma_drift_stream(spark, dirs):
     assert sum(1 for r in rows if r["metric_name"] == "Current") == 1
 
 
-@pytest.mark.skipif(
-    not sp._tws_available(), reason="protobuf not installed (transformWithState dep)"
-)
-def test_ewma_drift_stream_tws_parity(spark, dirs):
-    """The transformWithStateInPandas twin produces byte-identical
-    changelog rows to the applyInPandasWithState implementation."""
-    _drop(dirs, "b1.txt", GOLDEN_LINES)
-    q = sp.ewma_drift_stream_tws(spark, dirs["drop"], dirs["out"], dirs["ckpt"])
-    q.awaitTermination(120)
-    rows = {
-        r["metric_name"]: r for r in spark.read.parquet(dirs["out"]).collect()
-    }
-    assert rows["Voltage"]["ewma"] == pytest.approx(1.345)
-    assert rows["Current"]["ewma"] == pytest.approx(13.0)
-    assert rows["Voltage"]["drift"] == 0.0
-
-
-def test_ewma_drift_stream_tws_raises_without_protobuf(spark, dirs):
-    if sp._tws_available():
-        pytest.skip("protobuf installed; gating path not reachable")
-    with pytest.raises(ImportError, match="protobuf"):
-        sp.ewma_drift_stream_tws(spark, dirs["drop"], dirs["out"], dirs["ckpt"])
-
-
 def test_changelog_batch_replay_is_idempotent(spark, dirs):
     """A changelog micro-batch that replays after a failure between the
     parquet write and the checkpoint commit must REPLACE its own
