@@ -15,7 +15,11 @@ cast to the declared schema — so the plan is a pure JVM local
 relation: no Python worker, no RDD, ~0.1-0.4 s per action. Intended
 for BOUNDED driver-side data (metadata, collected aggregates); a big
 batch would bloat the plan — keep using readers/createDataFrame for
-real data.
+real data. A batch of data rows that arrives in driver memory (a POST
+body, :func:`sources.ingest.lines_df`) goes through
+``createDataFrame(<pyarrow.Table>)`` instead: that also plans a JVM
+``LocalTableScan``, without putting the rows into the plan as
+literals.
 """
 
 from __future__ import annotations

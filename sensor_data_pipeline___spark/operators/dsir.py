@@ -289,6 +289,8 @@ def save_dsir_index(
     raw gram under the subset relation, so per-bucket
     ``ct = count(rows where pred)`` and ``cr = count(*)`` equal the
     two-pass counts row for row (pinned by test)."""
+    if (target is None) == (target_pred is None):
+        raise ValueError("pass exactly one of target or target_pred")
     _META_CACHE.pop(path, None)
     from sensor_data_pipeline___spark.operators import _probe_cache
     from sensor_data_pipeline___spark.operators._local import local_df
@@ -296,10 +298,6 @@ def save_dsir_index(
     _probe_cache.invalidate(path)  # counts are rewritten under this root
 
     if target_pred is not None:
-        if target is not None:
-            raise ValueError(
-                "pass either target or target_pred, not both"
-            )
         bf = hashed_ngram_buckets(
             raw_sample.withColumn("_is_t", target_pred),
             text_col, id_col, n_buckets, salt, hash_kind,

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sensor_data_pipeline___spark.operators._writes import overwrite_mode
+
 
 def _hash_hex(id_col: Column, salt: str) -> Column:
     """Content-stable 128-bit hex string: md5(salt|id) — the same
@@ -91,9 +93,13 @@ def write_shards(
     one task before ``partitionBy`` — without it every task holds a
     slice of every shard and the writer emits tasks × shards small
     files (the small-files failure mode ``Warehouse.compact`` exists
-    to clean up; better not to create it)."""
+    to clean up; better not to create it).
+
+    The write pins STATIC partition overwrite: a re-export replaces
+    the whole directory, so an earlier export's shards that the new
+    one does not write (a larger ``n_shards`` before) are gone."""
     assigned = shard_assign(df, id_col, n_shards, salt)
-    (
+    out = (
         assigned.repartition(n_shards, "shard")
         # sort by (shard, pos), not pos alone: hash collisions can
         # co-locate several shards in one task partition, and relying
@@ -101,10 +107,9 @@ def write_shards(
         # preserve pos order is an implementation detail, not a
         # contract
         .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(out_dir)
     )
+    with overwrite_mode(df.sparkSession, "static"):
+        out.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
 
 
 def mixture_sample(

@@ -19,8 +19,9 @@ Semantics matched from the reference:
   watermark (SURVEY.md §2.8).
 - **Full refresh (M5)**: rebuild from scratch, ignoring watermarks.
 
-Scale posture: the only driver-side values are the two scalar
-watermarks (single-row aggregates). Every data-path operation is a
+Scale posture: the only driver-side values are the scalar watermarks
+(single-row aggregates) and the touched days' dates (observed during
+the parse). Every data-path operation is a
 DataFrame transform; per-run work is bounded by the touched partitions,
 not table size.
 """
@@ -29,7 +30,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline___spark.operators import _fsio
@@ -121,6 +122,36 @@ def run_gold(wh: Warehouse, full_refresh: bool = False) -> int:
     return n
 
 
+def _merge_days(wh: Warehouse, new_silver: DataFrame, days: list) -> Observation:
+    """The merge-once tail both ``run_pipeline`` paths share: upsert
+    ``new_silver`` into the listed days' silver partitions, write them,
+    and recompute those days' gold from the same frame. Returns the
+    gold write's Observation (``n`` = gold rows written)."""
+    # the read takes silver's schema from the table's record, so it
+    # launches no Spark job (see Warehouse.read)
+    existing = wh.read(SILVER)
+    # checkpoint the merged days ONCE: the silver write and the gold
+    # recompute below both replay the materialization — without it,
+    # gold would re-read silver (a second pruned scan and a replay of
+    # the anti-join) per run
+    merged = _upsert(
+        existing.filter(F.col("reading_date").isin(days)),  # pruned
+        new_silver,
+    ).localCheckpoint(eager=True)
+    wh.write(SILVER, merged)  # dynamic overwrite of touched partitions
+    # gold for the touched days straight from the frame just written,
+    # folded into the write action itself: the day aggregate is a
+    # handful of rows over the checkpointed merge, so it needs no
+    # checkpoint and no count job — the Observation counts the rows
+    # as they are written. An empty aggregate writes NO partitions
+    # under dynamic overwrite (a no-op).
+    gold = Observation()
+    wh.write(
+        GOLD, silver_to_gold(merged).observe(gold, F.count(F.lit(1)).alias("n"))
+    )
+    return gold
+
+
 def run_pipeline(
     wh: Warehouse,
     full_refresh: bool = False,
@@ -131,6 +162,18 @@ def run_pipeline(
     (reference airflow/dags/sensor_data_pipeline.py:88,101). Without
     ``increment`` (the watermark path) returns (silver rows, gold
     days) written.
+
+    The watermark path runs as one pass when gold is caught up with
+    silver (``MAX(gold.calculated_at) >= MAX(silver.processed_at)``):
+    the bronze rows past silver's watermark are parsed once (their
+    count and distinct days observed during that parse), and the
+    merge-once tail the increment path also runs upserts those days
+    and recomputes their gold from the merged frame. Exact because,
+    with gold caught up, the days :func:`run_gold` would recompute are
+    precisely the new rows' days. When gold lags (a crash between the
+    silver and gold writes, a bare :func:`run_silver`, or a run whose
+    days produced no both-metric gold row), or either table is empty,
+    it falls back to ``run_silver`` then ``run_gold``.
 
     ``increment`` is the streaming fast path: the micro-batch loop
     already HOLDS the exact new bronze rows, so the parse consumes
@@ -154,17 +197,17 @@ def run_pipeline(
     this run (their days' existing partitions are untouched) and must
     be re-presented with their day listed to land.
 
-    The increment path fuses the gold aggregate into its write and
-    counts nothing: it returns ``(-1, -1)`` (``(0, 0)`` for an empty
-    day list, which writes nothing)."""
+    The increment path counts nothing: it returns ``(-1, -1)``
+    (``(0, 0)`` for an empty day list, which writes nothing)."""
     if increment is not None and affected_days is None:
         raise ValueError("run_pipeline: an increment needs its affected_days")
-    if increment is None or full_refresh or not wh.exists(SILVER):
+    if full_refresh or not wh.exists(SILVER):
         return run_silver(wh, full_refresh), run_gold(wh, full_refresh)
+    if increment is None:
+        return _run_watermarked(wh)
     if not affected_days:
         return 0, 0
-
-    # LAZY on purpose: the merged checkpoint below is the single
+    # LAZY on purpose: the merged checkpoint in the tail is the single
     # materialization — parsing inside it avoids a dedicated parse job
     # per trigger.
     # CONTRACT GUARD: the merged frame is written with dynamic
@@ -176,25 +219,56 @@ def run_pipeline(
     new_silver = bronze_to_silver(
         increment.select("id", "raw_line", "ingested_at")
     ).filter(F.col("reading_date").isin(affected_days))
-    # the read takes silver's schema from the table's record, so it
-    # launches no Spark job (see Warehouse.read)
-    existing = wh.read(SILVER)
-    # checkpoint the merged days ONCE: the silver write and the gold
-    # recompute below both replay the materialization — without it,
-    # gold would re-read silver (a second pruned scan and a replay of
-    # the anti-join) per trigger
-    merged = _upsert(
-        existing.filter(F.col("reading_date").isin(affected_days)),  # pruned
-        new_silver,
-    ).localCheckpoint(eager=True)
-    wh.write(SILVER, merged)  # dynamic overwrite of touched partitions
-    # gold for the touched days straight from the frame just written,
-    # folded into the write action itself: the day aggregate is a
-    # handful of rows over the checkpointed merge, so it needs no
-    # checkpoint and no count job. An empty aggregate writes NO
-    # partitions under dynamic overwrite (a no-op).
-    wh.write(GOLD, silver_to_gold(merged))
+    _merge_days(wh, new_silver, affected_days)
     return -1, -1
+
+
+def _run_watermarked(wh: Warehouse) -> tuple[int, int]:
+    """The watermark path of :func:`run_pipeline` (silver exists, not
+    a full refresh)."""
+    # silver's processed_at watermark, and whether gold's calculated_at
+    # watermark has caught up with it, from ONE aggregate over the
+    # union of the two timestamp columns (A2: the two scalar probes
+    # share their jobs). Compared inside Spark, so no driver-side
+    # timezone conversion can reorder them.
+    null = F.lit(None).cast("timestamp")
+    wm = (
+        wh.read(SILVER).select(F.col("processed_at").alias("s"), null.alias("g"))
+        .unionByName(
+            wh.read(GOLD).select(null.alias("s"), F.col("calculated_at").alias("g"))
+        )
+        .agg(
+            F.max("s").alias("silver"),
+            (F.max("g") >= F.max("s")).alias("caught_up"),
+        )
+        .first()
+    )
+    if not wm["caught_up"]:
+        # gold lags silver, or either table is empty: the days gold
+        # owes are not only the new rows' days, so let run_gold find
+        # them from its own watermark
+        return run_silver(wh), run_gold(wh)
+
+    bronze = wh.read(BRONZE).select("id", "raw_line", "ingested_at")
+    # the watermark-bounded parse, materialized ONCE (the merge's two
+    # uses replay it instead of re-running the bronze scan + parse);
+    # its row count and distinct days are observed during that same
+    # job, so they cost no aggregate job of their own
+    new = Observation()
+    past_wm = bronze.filter(F.col("ingested_at") > F.lit(wm["silver"]))  # J1
+    new_silver = (
+        bronze_to_silver(past_wm)
+        .observe(
+            new,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set("reading_date").alias("days"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    seen = new.get
+    if seen["n"] == 0:
+        return 0, 0  # no new data — a re-run is a no-op (M1 idempotency)
+    return seen["n"], _merge_days(wh, new_silver, seen["days"]).get["n"]
 
 
 def backfill_gold(wh: Warehouse, start_date: str, end_date: str) -> int:

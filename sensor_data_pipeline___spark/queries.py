@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -110,20 +111,20 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # bare read's optimizer estimate was exactly the summed file
     # sizes, so the gate behavior is unchanged. Any file we cannot
     # stat locally (remote URI, vanished) counts as over-limit —
-    # the conservative branch is NOT rebalancing.
+    # the conservative branch is NOT rebalancing. A ``file:`` URI is
+    # percent-encoded (a space reads ``%20``), so it is decoded before
+    # the stat; the sum stops at the first total over the limit.
     est = 0
     for f in df.inputFiles():
-        local = f[len("file:"):] if f.startswith("file:") else f
-        if "://" in local:
-            est = _T_WIDE_MAX_BYTES + 1
-            break
+        uri = urlparse(f)
+        if uri.scheme not in ("", "file"):
+            return df
         try:
-            est += os.path.getsize(local)
+            est += os.path.getsize(unquote(uri.path))
         except OSError:
-            est = _T_WIDE_MAX_BYTES + 1
-            break
-    if est > _T_WIDE_MAX_BYTES:
-        return df
+            return df
+        if est > _T_WIDE_MAX_BYTES:
+            return df
     return df.repartition(target)
 
 

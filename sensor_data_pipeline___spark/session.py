@@ -67,8 +67,9 @@ def get_spark(app_name: str = "sensor_pipeline_spark", *, cpus: int | None = Non
         # sides stay bounded by AQE's advisory sizing + skew split
         # (both on), and Spark still falls back to SMJ when the
         # conditions fail — this is the documented reasonable default
-        # for batch ETL, not a local-mode twiddle. Measured r16:
-        # release_audit family −8-12%, no query slower (SCALING.md).
+        # for batch ETL, not a local-mode twiddle. Unmeasured: no A/B
+        # of this flag is committed (SCALING.md has none); re-pricing
+        # it is ROADMAP open item 5.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.ui.enabled", "false")
     )

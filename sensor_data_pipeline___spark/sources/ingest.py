@@ -11,7 +11,9 @@ src/db/repositories/readings.py:9-22:
 - bronze stores the RAW LINE (not the parsed values) plus a surrogate id
   and ingest wall-clock timestamp.
 
-Scale notes: validation is a single aggregate over the batch (one Spark
+Scale notes: the POST body enters Spark as an Arrow-built local
+relation (:func:`lines_df`), so no action on it starts a Python worker.
+Validation is a single aggregate over the batch (one Spark
 job, map-side combined count — no collect of data rows). The surrogate
 id uses ``monotonically_increasing_id()``, which the caller offsets by
 the bronze table's current max id (``Warehouse.max_id``) — unique and
@@ -25,6 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,8 +45,16 @@ class IngestResult:
 
 
 def lines_df(spark: SparkSession, lines: list[str]) -> DataFrame:
-    """A list of raw lines (one POST body) as a single-column DataFrame."""
-    return spark.createDataFrame([(ln,) for ln in lines], "raw_line string")
+    """A list of raw lines (one POST body) as a single-column DataFrame.
+
+    Built from an Arrow table, so the plan is a JVM ``LocalTableScan``
+    (whatever ``spark.sql.execution.arrow.pyspark.enabled`` says): the
+    gate aggregate and the bronze append each scan it without a Python
+    worker round trip, which a ``createDataFrame`` over a Python list
+    (a Python-RDD scan) costs every action."""
+    return spark.createDataFrame(
+        pa.table({"raw_line": pa.array(lines, pa.string())})
+    )
 
 
 def flag_lines(raw: DataFrame) -> tuple[DataFrame, Column]:

@@ -7,6 +7,8 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline___spark.operators import dsir
@@ -282,3 +284,31 @@ def test_persisted_index_xxhash64_kind_recorded_and_replayed(
     )
     assert len(b_md5) == len(b_xx)  # same gram count either way
     assert b_md5 != b_xx
+
+
+def test_target_pred_fit_equals_explicit_target_fit(spark, tmp_path):
+    """The one-pass ``target_pred`` fit writes the same store as the
+    two-pass fit on the explicit target slice: every target gram is a
+    raw gram, so the conditional count equals the target's own count
+    bucket for bucket, and the meta totals follow."""
+    docs = readers.table(spark, "documents", SF)
+    en = F.col("lang") == "en"
+    two, one = str(tmp_path / "two_pass"), str(tmp_path / "one_pass")
+    dsir.save_dsir_index(docs.filter(en), docs, two)
+    dsir.save_dsir_index(None, docs, one, target_pred=en)
+
+    def store(path, part):
+        return sorted(map(tuple, spark.read.parquet(f"{path}/{part}").collect()))
+
+    assert store(one, "counts") == store(two, "counts")
+    assert store(one, "meta") == store(two, "meta")
+    assert len(store(one, "counts")) > 0
+
+
+def test_save_dsir_index_needs_exactly_one_target(spark, tmp_path):
+    docs = readers.table(spark, "documents", SF)
+    path = str(tmp_path / "dsir")
+    with pytest.raises(ValueError, match="exactly one"):
+        dsir.save_dsir_index(None, docs, path)
+    with pytest.raises(ValueError, match="exactly one"):
+        dsir.save_dsir_index(docs, docs, path, target_pred=F.col("lang") == "en")

@@ -427,3 +427,17 @@ def test_temperature_tokens_quota_shape(spark):
     # proportional would have been 900/100: sqrt lifted 'small' 2.5x
     assert q["small"] > 100
     assert sum(q.values()) <= 1000
+
+
+def test_write_shards_reexport_replaces_directory(spark, tmp_path):
+    """A re-export into a directory holding an earlier, wider export
+    replaces it: shards the new export does not write are gone, even
+    under the engine session's dynamic partition overwrite."""
+    out = os.path.join(str(tmp_path), "shards")
+    rows = lambda n: spark.range(n).withColumnRenamed("id", "doc_id")
+    write_shards(rows(40), out, "doc_id", n_shards=4)
+    assert spark.read.parquet(out).count() == 40
+    write_shards(rows(10), out, "doc_id", n_shards=2)
+    back = spark.read.parquet(out)
+    assert sorted(r.doc_id for r in back.collect()) == list(range(10))
+    assert {r.shard for r in back.select("shard").distinct().collect()} <= {0, 1}

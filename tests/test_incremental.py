@@ -9,6 +9,7 @@ import time
 import pytest
 
 from sensor_data_pipeline___spark.operators import incremental
+from sensor_data_pipeline___spark.plans import explain
 from sensor_data_pipeline___spark.sources import ingest
 from sensor_data_pipeline___spark.warehouse import BRONZE, GOLD, SILVER, Warehouse
 from tests.conftest import GOLDEN_LINES
@@ -580,3 +581,87 @@ def test_backfill_gold_drops_stale_day_on_file_uri(spark, tmp_path):
     gold = {str(r["reading_date"]) for r in wh.read(GOLD).collect()}
     assert gold == {"2022-04-14"}
     assert not _fsio.exists(wh.path(GOLD) + "/reading_date=2022-04-15")
+
+
+def test_watermark_path_recovers_lagging_gold(spark, wh):
+    """A bare run_silver after a late line leaves gold behind silver
+    (gold's watermark is older than silver's). The next run_pipeline
+    must not take the one-pass path — it finds no new bronze rows, so
+    it would recompute nothing — but fall back to run_gold, which
+    recomputes the late line's day from its own watermark."""
+    _ingest(spark, wh, GOLDEN_LINES)
+    incremental.run_pipeline(wh)
+    time.sleep(1.1)
+
+    _ingest(spark, wh, ["1649941819 Voltage 2.65"])
+    assert incremental.run_silver(wh) == 1
+    assert incremental.run_pipeline(wh) == (0, 1)
+    gold = wh.read(GOLD).collect()
+    assert len(gold) == 1
+    # AVG(1.34, 1.35, 2.65) × AVG(12.0, 14.0)
+    assert gold[0]["metric_value"] == pytest.approx(((1.34 + 1.35 + 2.65) / 3) * 13.0)
+
+
+def test_watermark_path_one_metric_day_lands_with_its_pair(spark, wh):
+    """A new day with only Voltage writes its silver row and no gold
+    row: the one-pass path returns (1, 0) (its gold Observation reads
+    0 on an empty write). Gold then lags silver, so the run that adds
+    the day's Current recomputes the day: AVG(V) × AVG(I) = 3 × 14."""
+    _ingest(spark, wh, GOLDEN_LINES)
+    incremental.run_pipeline(wh)
+    time.sleep(1.1)
+
+    _ingest(spark, wh, ["1650028219 Voltage 3.00"])
+    assert incremental.run_pipeline(wh) == (1, 0)
+    assert wh.read(GOLD).count() == 1
+    time.sleep(1.1)
+
+    _ingest(spark, wh, ["1650028220 Current 14.0"])
+    assert incremental.run_pipeline(wh) == (1, 1)
+    gold = {str(r["reading_date"]): r["metric_value"] for r in wh.read(GOLD).collect()}
+    assert gold["2022-04-15"] == pytest.approx(42.0)
+    assert gold["2022-04-14"] == pytest.approx(17.485)
+
+
+def test_steady_hourly_run_job_count_pinned(spark, wh):
+    """The one-pass watermark path runs FOUR actions — the two-table
+    watermark aggregate, the new rows' parse checkpoint (its row count
+    and days are observed inside it), the merged-days checkpoint and
+    the silver write — plus the gold write, which AQE splits into at
+    most 8 jobs on this shape. The run_silver + run_gold pair it
+    replaces took 18. Pin the ceiling so a re-introduced count,
+    distinct or gold checkpoint fails here rather than as a drift."""
+    _ingest(spark, wh, GOLDEN_LINES)
+    incremental.run_pipeline(wh)
+    time.sleep(1.1)
+    _ingest(spark, wh, ["1649941819 Voltage 2.0", "1650028220 Current 13.0"])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("hourly-pin", "steady hourly run_pipeline job-count pin")
+    try:
+        counts = incremental.run_pipeline(wh)
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("hourly-pin"))
+        sc.setJobGroup(None, None)
+    assert counts == (2, 1)
+    assert 0 < n_jobs <= 8, n_jobs
+
+
+def test_lines_df_is_a_local_table_scan(spark):
+    """A POST body becomes a JVM local relation, not a Python-RDD
+    scan, whether or not Arrow is enabled for pandas conversion; blank,
+    whitespace-only and non-ASCII lines come back unchanged."""
+    lines = ["1649941817 Voltage 1.34", "", "   ", "1649941818 Völtage 1.35 ☃", ""]
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            df = ingest.lines_df(spark, lines)
+            plan = explain.formatted_plan(df)
+            assert "LocalTableScan" in plan, plan
+            assert "ExistingRDD" not in plan and "Python" not in plan, plan
+            assert [r["raw_line"] for r in df.collect()] == lines
+    finally:
+        spark.conf.set(conf, prev)
+    assert ingest.lines_df(spark, []).count() == 0

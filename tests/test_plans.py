@@ -479,3 +479,32 @@ def test_t_wide_rebalances_only_undersplit_scans(spark):
     a = sorted(r["doc_id"] for r in plain.select("doc_id").collect())
     b = sorted(r["doc_id"] for r in wide.select("doc_id").collect())
     assert a == b
+
+
+def test_t_wide_size_gate_decodes_file_uris(spark, tmp_path, monkeypatch):
+    """The size gate stats each ``inputFiles()`` entry, and those are
+    percent-encoded ``file:`` URIs: a table under a directory whose
+    name holds a space must still be sized (and so rebalanced when
+    small), not counted as unstattable. The sum stops at the first
+    total over the cap."""
+    import os
+
+    import sensor_data_pipeline___spark.queries as Q
+
+    path = str(tmp_path / "dir with space" / "t")
+    spark.range(300).repartition(3).write.parquet(path)
+    narrow = spark.read.parquet(path).coalesce(1)
+    assert any("%20" in f for f in narrow.inputFiles())
+    monkeypatch.setattr(Q.readers, "table", lambda *_a, **_k: narrow)
+
+    wide = Q._t_wide(spark, SF, "t")
+    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+    sized = []
+    getsize = os.path.getsize
+    monkeypatch.setattr(
+        os.path, "getsize", lambda p: sized.append(p) or getsize(p)
+    )
+    monkeypatch.setattr(Q, "_T_WIDE_MAX_BYTES", 0)
+    assert Q._t_wide(spark, SF, "t") is narrow
+    assert len(sized) == 1 and " " in sized[0], sized
