@@ -212,21 +212,30 @@ def child_dirs(path: str) -> "list[str]":
 def list_files_recursive(path: str, suffix: str) -> "list[str]":
     """Every file under ``path`` (recursive) ending in ``suffix``;
     [] if path is absent."""
+    return sorted(file_sizes(path, suffix))
+
+
+def file_sizes(path: str, suffix: str) -> "dict[str, int]":
+    """{file: bytes} for every file under ``path`` (recursive) ending
+    in ``suffix``; {} if path is absent. On a URI the sizes come from
+    the listing's own ``FileStatus``, so no file is stat'ed twice."""
     if not is_uri(path):
         import glob
 
-        return sorted(
-            glob.glob(
+        return {
+            f: os.path.getsize(f)
+            for f in glob.glob(
                 os.path.join(path, "**", f"*{suffix}"), recursive=True
             )
-        )
+        }
     _, fs, p = _hfs(path)
     if not fs.exists(p):
-        return []
-    out = []
+        return {}
+    out = {}
     it = fs.listFiles(p, True)
     while it.hasNext():
-        f = it.next().getPath().toString()
+        st = it.next()
+        f = st.getPath().toString()
         if f.endswith(suffix):
-            out.append(f)
-    return sorted(out)
+            out[f] = int(st.getLen())
+    return out

@@ -61,14 +61,26 @@ def _upsert(existing_days: DataFrame, new_silver: DataFrame) -> DataFrame:
 
 
 def run_silver(wh: Warehouse, full_refresh: bool = False) -> int:
-    """Bronze → silver incremental run. Returns rows written."""
+    """Bronze → silver incremental run. Returns rows written.
+
+    Both writes here are table-sized (the history or full-refresh
+    load, and the gold-lag fallback of :func:`run_pipeline`), so they
+    route rows by ``reading_date`` with AQE's rebalance hint: each day
+    lands in one task and is written as one file, small days share a
+    task and a skewed day is split, from the shuffle's own statistics
+    rather than a size setting."""
     bronze = wh.read(BRONZE).select("id", "raw_line", "ingested_at")
     existing = wh.read(SILVER)
 
     if full_refresh or not wh.exists(SILVER):
         new_silver = bronze_to_silver(bronze)
         n = new_silver.count()
-        wh.write(SILVER, new_silver, mode="overwrite", wipe=full_refresh)
+        wh.write(
+            SILVER,
+            new_silver.hint("rebalance", "reading_date"),
+            mode="overwrite",
+            wipe=full_refresh,
+        )
         return n
 
     wm = _scalar_watermark(existing, "processed_at")
@@ -89,7 +101,10 @@ def run_silver(wh: Warehouse, full_refresh: bool = False) -> int:
     affected = new_silver.select("reading_date").distinct()
     existing_affected = existing.join(F.broadcast(affected), "reading_date", "left_semi")
     # dynamic overwrite of touched partitions only
-    wh.write(SILVER, _upsert(existing_affected, new_silver))
+    wh.write(
+        SILVER,
+        _upsert(existing_affected, new_silver).hint("rebalance", "reading_date"),
+    )
     return n
 
 
@@ -138,7 +153,12 @@ def _merge_days(wh: Warehouse, new_silver: DataFrame, days: list) -> Observation
         existing.filter(F.col("reading_date").isin(days)),  # pruned
         new_silver,
     ).localCheckpoint(eager=True)
-    wh.write(SILVER, merged)  # dynamic overwrite of touched partitions
+    # dynamic overwrite of touched partitions, one file per day:
+    # `merged` holds only the touched days, so a single task writes
+    # them without an exchange or a job of its own. A rebalance here
+    # would add a shuffle job per merge and, under AQE, drop the
+    # checkpoint's hash partitioning that the gold aggregate reuses.
+    wh.write(SILVER, merged.coalesce(1))
     # gold for the touched days straight from the frame just written,
     # folded into the write action itself: the day aggregate is a
     # handful of rows over the checkpointed merge, so it needs no

@@ -5,9 +5,9 @@ SURVEY.md §3.2).
 
 Plan shape: two partition-pruned parquet scans (both tables partitioned
 by ``reading_date`` on disk, so the half-open date filter prunes whole
-partitions), a UNION ALL (no shuffle), and one global range-partitioned
-sort. At 100 TB the sort is the only wide stage and is bounded by the
-date range's selectivity.
+partitions), a UNION ALL, and a sort of the union inside ONE task. No
+stage is wide: the GET is a single Spark job with no exchange, and its
+cost is bounded by the date range's selectivity.
 """
 
 from __future__ import annotations
@@ -32,7 +32,18 @@ def readings_by_date_range(
     silver: DataFrame, gold: DataFrame, from_str: str, to_str: str
 ) -> DataFrame:
     """(silver σ_range ∪ALL gold σ_range) sorted by (time, name)
-    — exactly the reference's serving SQL (readings.py:32-46)."""
+    — exactly the reference's serving SQL (readings.py:32-46).
+
+    The sort runs in one task (``coalesce(1)`` then
+    ``sortWithinPartitions``), not as a global ``orderBy``: a global
+    sort plans a range exchange, which costs a sampling job, a map job
+    and a sort job per GET. The trade is deliberate. The result goes
+    whole to one driver response anyway, and the pruned range is what
+    one response holds, so a single task scanning and sorting it is
+    the same order of work as the driver receiving it; a range far
+    larger than one response would want the exchange back. Rows tied
+    on ``(reading_time, metric_name)`` come back in no defined order,
+    as under ``orderBy`` and in the reference."""
     rng = normalize_range(from_str, to_str)
     if rng is None:
         raise ValueError(f"invalid date range: from={from_str!r} to={to_str!r}")
@@ -43,7 +54,11 @@ def readings_by_date_range(
     gold_sel = gold.filter(_range_filter(F.col("reading_date"), from_d, to_d)).select(
         F.col("reading_time"), F.col("metric_name"), F.col("metric_value")
     )
-    return silver_sel.unionByName(gold_sel).orderBy("reading_time", "metric_name")
+    return (
+        silver_sel.unionByName(gold_sel)
+        .coalesce(1)
+        .sortWithinPartitions("reading_time", "metric_name")
+    )
 
 
 def to_wire_format(readings: DataFrame) -> DataFrame:

@@ -16,6 +16,11 @@ partitions reproduces dbt's incremental upsert because the partition
 key contains the merge key (gold) or the merged rows are fully
 recomputed per partition (silver).
 
+Silver's pipeline writes leave ONE parquet file per ``reading_date``
+partition they write (see :meth:`Warehouse.write`), so a GET opens one
+file per silver day in its range; only appends (bronze, manual patches)
+add files to a partition, and :meth:`Warehouse.compact` folds those.
+
 Each table root also holds ``_schema.json``, the table's schema record
 (see :meth:`Warehouse.read`): the one piece of catalog metadata a
 table format would keep that plain parquet lacks.
@@ -123,6 +128,15 @@ class Warehouse:
         overwrite instead (drop ALL existing partitions first) — the
         full-refresh path (M5).
 
+        Spark writes one file per table partition per task that holds
+        its rows, so the caller's partitioning sets the file count:
+        the silver writers hand in frames that put each day in one
+        task (``incremental._merge_days`` a one-task checkpoint of the
+        touched days, ``incremental.run_silver`` a rebalance by day),
+        and each written partition is then ONE file. No repartition
+        happens here: a merge checkpoint is already one task's worth,
+        and a shuffle would cost it a job.
+
         Silver rows are sorted by ``metric_name`` within each partition
         file — the analog of the reference's composite
         ``(reading_date, metric_name)`` index (stg_readings.sql:18-21):
@@ -211,19 +225,17 @@ class Warehouse:
 
     def file_stats(self, table: str) -> dict[str, tuple[int, int]]:
         """{partition_dir: (n_files, total_bytes)} from a filesystem
-        listing — the input to the compaction decision. Local walk
-        here; on HDFS/S3 the identical listing comes from the
-        FileSystem API / S3 LIST (what table formats keep in their
-        manifest instead)."""
+        listing — the input to the compaction decision. The listing
+        goes through ``_fsio``: a local walk for a plain path, the
+        Hadoop FileSystem API (HDFS, S3 LIST, ``file:``) for a URI —
+        what table formats keep in their manifest instead. Keys are
+        relative to the table root (``.`` for files at the root)."""
+        root = _fsio.normalize(self.path(table))
         stats: dict[str, tuple[int, int]] = {}
-        root = self.path(table)
-        for dirpath, _dirs, files in os.walk(root):
-            parts = [f for f in files if f.endswith(".parquet")]
-            if not parts:
-                continue
-            rel = os.path.relpath(dirpath, root)
-            total = sum(os.path.getsize(os.path.join(dirpath, f)) for f in parts)
-            stats[rel] = (len(parts), total)
+        for f, size in _fsio.file_sizes(root, ".parquet").items():
+            rel = os.path.dirname(f)[len(root):].lstrip("/") or "."
+            n, total = stats.get(rel, (0, 0))
+            stats[rel] = (n + 1, total + size)
         return stats
 
     def compact(
@@ -236,11 +248,13 @@ class Warehouse:
         each holds ~``target_file_bytes`` parquet files. Returns the
         partition dirs rewritten (empty list = nothing to do).
 
-        Streaming/incremental appends leave one file per (micro-batch,
-        partition); a year of hourly batches is ~8 760 files per
-        partition and scan planning, footer reads, and shuffle-read
-        fan-in all degrade with file COUNT, not bytes — the classic
-        100 TB operational failure. Compaction = maintenance rewrite:
+        Appends (bronze ingest, manual silver patches) leave one file
+        per (append, partition); the silver pipeline writes rewrite
+        whole partitions as one file each, so they do not fragment. A
+        year of hourly appends is ~8 760 files per partition, and scan
+        planning, footer reads, and shuffle-read fan-in all degrade
+        with file COUNT, not bytes — the classic 100 TB operational
+        failure. Compaction = maintenance rewrite:
         per fragmented partition, ``repartition(partition_col)`` routes
         its rows to one task and ``maxRecordsPerFile`` re-splits output
         at the target size, so large partitions still produce multiple

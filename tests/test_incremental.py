@@ -4,6 +4,7 @@ gold; full refresh rebuilds; merge is idempotent on raw_id."""
 
 from __future__ import annotations
 
+import datetime
 import time
 
 import pytest
@@ -645,6 +646,61 @@ def test_steady_hourly_run_job_count_pinned(spark, wh):
         sc.setJobGroup(None, None)
     assert counts == (2, 1)
     assert 0 < n_jobs <= 8, n_jobs
+
+
+def test_pipeline_writes_one_silver_file_per_day(spark, wh):
+    """Every pipeline write leaves one parquet file per silver day it
+    writes: the history load on an empty warehouse (rebalanced by
+    day), a watermark-path hourly run with late lines, and an
+    increment run (both a one-task write of the merged days)."""
+    from pyspark.sql import functions as F
+
+    def assert_one_file_per_day(n_days):
+        stats = wh.file_stats(SILVER)
+        assert len(stats) == n_days, stats
+        assert all(
+            rel.startswith("reading_date=") and n == 1
+            for rel, (n, _b) in stats.items()
+        ), stats
+
+    day2 = ["1650028217 Voltage 2.0", "1650028218 Current 10.0"]  # 2022-04-15
+    _ingest(spark, wh, GOLDEN_LINES + day2)
+    assert incremental.run_pipeline(wh) == (6, 2)
+    assert_one_file_per_day(2)
+    time.sleep(1.1)
+
+    # late lines for both old days, and a new day
+    _ingest(spark, wh, [
+        "1649941819 Voltage 2.65",
+        "1650028219 Current 14.0",
+        "1650114617 Voltage 3.0",
+        "1650114618 Current 11.0",
+    ])
+    assert incremental.run_pipeline(wh) == (4, 3)
+    assert_one_file_per_day(3)
+    time.sleep(1.1)
+
+    # an increment with a late day-2 line and a new day
+    inc, _ = ingest.ingest_batch(
+        spark, ["1650028220 Voltage 4.0", "1650201017 Voltage 5.0",
+                "1650201018 Current 2.0"]
+    )
+    inc = inc.withColumn("id", F.col("id") + wh.max_id(BRONZE))
+    wh.append(BRONZE, inc)
+    days = [datetime.date(2022, 4, 15), datetime.date(2022, 4, 17)]
+    assert incremental.run_pipeline(wh, increment=inc, affected_days=days) == (-1, -1)
+    assert_one_file_per_day(4)
+
+    silver = wh.read(SILVER)
+    assert silver.count() == 13
+    assert silver.select("raw_id").distinct().count() == 13
+    gold = {str(r["reading_date"]): r["metric_value"] for r in wh.read(GOLD).collect()}
+    assert gold == pytest.approx({
+        "2022-04-14": ((1.34 + 1.35 + 2.65) / 3) * 13.0,
+        "2022-04-15": ((2.0 + 4.0) / 2) * 12.0,
+        "2022-04-16": 3.0 * 11.0,
+        "2022-04-17": 5.0 * 2.0,
+    })
 
 
 def test_lines_df_is_a_local_table_scan(spark):

@@ -25,7 +25,12 @@ from tests.conftest import DIVERGENCE_LINES, GOLDEN_LINES, INVALID_LINES
 def bronze(spark):
     df, result = ingest.ingest_batch(spark, GOLDEN_LINES)
     assert result.accepted == 4 and result.skipped == 0
-    return df.cache()
+    df = df.cache()
+    yield df
+    # a cached POST frame stays in the session's cache manager, which
+    # would serve its frozen ingested_at to every later POST of the
+    # same lines (their plans match the cached one)
+    df.unpersist()
 
 
 def test_bronze_counts(bronze):

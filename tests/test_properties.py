@@ -434,6 +434,54 @@ _bpe_texts = st.lists(
 )
 
 
+#: Symbols built from regex metacharacters, the quote markers ``\Q`` /
+#: ``\E``, ``$`` group references and backslashes: everything that
+#: could escape ``_merge_rx``'s literal quoting of the pattern or of
+#: the replacement. Symbols never contain spaces (the BPE contract).
+_rx_symbols = st.lists(
+    st.sampled_from(
+        ["\\", "\\E", "\\Q", "$", "$1", "$0", ".", "*", "+", "?", "^",
+         "|", "(", ")", "[", "]", "{", "}", "E", "Q", "a"]
+    ),
+    min_size=1,
+    max_size=3,
+).map("".join)
+
+
+@st.composite
+def _rx_merge_case(draw):
+    """(left, right, words): words are symbol lists drawn mostly from
+    the merge's own two symbols, so adjacent and overlapping
+    candidate pairs (``l r r``, ``l l l`` with left == right) occur."""
+    left, right = draw(_rx_symbols), draw(_rx_symbols)
+    sym = st.one_of(st.just(left), st.just(right), _rx_symbols)
+    words = draw(
+        st.lists(st.lists(sym, min_size=1, max_size=8), min_size=1, max_size=6)
+    )
+    return left, right, words
+
+
+@settings(max_examples=40, deadline=None, derandomize=True)
+@given(_rx_merge_case())
+def test_merge_rx_matches_python_fold_on_adversarial_symbols(spark, case):
+    """``_merge_rx`` (one merge as a Java ``regexp_replace``) equals the
+    greedy left-to-right non-overlapping fold for symbols full of regex
+    metacharacters, ``\\E``, ``$`` and backslashes."""
+    from sensor_data_pipeline___spark.operators.text import _merge_rx
+
+    left, right, words = case
+    df = spark.createDataFrame(
+        [(i, " ".join(w)) for i, w in enumerate(words)], "i long, s string"
+    )
+    got = {
+        r.i: r.m
+        for r in df.select("i", _merge_rx(F.col("s"), left, right).alias("m"))
+        .collect()
+    }
+    for i, w in enumerate(words):
+        assert got[i] == " ".join(_py_merge_once(w, (left, right))), (left, right, w)
+
+
 @settings(max_examples=10, deadline=None)
 @given(_bpe_texts, st.integers(min_value=1, max_value=4))
 def test_bpe_learn_and_encode_match_python_reference(spark, texts, k):

@@ -16,7 +16,9 @@ from tests.conftest import GOLDEN_LINES
 @pytest.fixture(scope="module")
 def silver(spark):
     bronze, _ = ingest.ingest_batch(spark, GOLDEN_LINES)
-    return bronze_to_silver(bronze).cache()
+    df = bronze_to_silver(bronze).cache()
+    yield df
+    df.unpersist()  # see tests/test_pipeline_golden.py::bronze
 
 
 def test_silver_suite_passes(spark, silver):

@@ -9,11 +9,13 @@ from __future__ import annotations
 import collections
 import datetime
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from sensor_data_pipeline___spark.operators import incremental, serving
+from sensor_data_pipeline___spark.plans import explain
 from sensor_data_pipeline___spark.warehouse import _RECORD, GOLD, SILVER, Warehouse
 from tests.conftest import GOLDEN_LINES
 from tests.test_incremental import _ingest
@@ -229,10 +231,11 @@ def test_recorded_read_fires_no_job(spark, wh):
 
 
 def test_get_job_budget_pinned(spark, wh):
-    """One ``GET /data`` over a small silver+gold warehouse: the two
-    reads fire no footer job, leaving at most 3 jobs for the pruned
-    scans, the sort and the fetch (5 while every read ran a
-    ``mergeSchema`` job). A re-introduced footer job fails here."""
+    """One ``GET /data`` over a small silver+gold warehouse is ONE
+    job: the two reads fire no footer job, and the sort runs inside
+    the fetch's single task (a global ``orderBy`` added a sampling
+    and a sort job; a ``mergeSchema`` read one more per table). A
+    re-introduced footer job or range exchange fails here."""
     _ingest(spark, wh, GOLDEN_LINES + DAY2)
     incremental.run_pipeline(wh)
 
@@ -245,4 +248,27 @@ def test_get_job_budget_pinned(spark, wh):
 
     n, rows = _jobs(spark, "get-pin", get)
     assert len(rows) == 8
-    assert 0 < n <= 3, n
+    assert n == 1, n
+
+
+def test_get_over_separately_written_days_is_sorted_without_exchange(spark, wh):
+    """A GET spanning three silver days, each written by its own POST
+    and ``run_pipeline``, plus their three gold rows: the rows come
+    back in ``(time, name)`` order although each day's file is sorted
+    by metric name and gold is a second scan, and the plan has no
+    Exchange."""
+    day3 = ["1650114617 Current 11.0", "1650114616 Voltage 3.0"]  # 2022-04-16
+    for lines in (DAY2, GOLDEN_LINES, day3):
+        _ingest(spark, wh, lines)
+        incremental.run_pipeline(wh)
+        time.sleep(1.1)  # watermark separation between the runs
+    df = serving.to_wire_format(
+        serving.readings_by_date_range(
+            wh.read(SILVER), wh.read(GOLD), "2022-04-14", "2022-04-17"
+        )
+    )
+    assert "Exchange" not in explain.formatted_plan(df)
+    rows = [(r["time"], r["name"], r["value"]) for r in df.collect()]
+    assert len(rows) == 11
+    assert sum(name == "Power" for _t, name, _v in rows) == 3
+    assert rows == sorted(rows, key=lambda r: (r[0], r[1]))

@@ -238,6 +238,42 @@ def test_warehouse_compaction(spark, tmp_path):
     assert wh2.read(SILVER).count() == 240
 
 
+def test_warehouse_compaction_on_file_uri(spark, tmp_path):
+    """``file_stats`` and ``compact`` list the table through the Hadoop
+    FileSystem branch of ``operators/_fsio`` on a ``file:`` root: a
+    fragmented day is found and rewritten to one file, a healthy day
+    keeps its file, and no row changes."""
+    from pyspark.sql import functions as F
+
+    from sensor_data_pipeline___spark.warehouse import SILVER, Warehouse
+
+    wh = Warehouse(spark, "file:" + str(tmp_path / "wh_uri"))
+    base = spark.range(40).select(
+        F.col("id").alias("raw_id"),
+        F.concat(F.lit("M"), (F.col("id") % 4).cast("string")).alias("metric_name"),
+        (F.col("id") * 1.5).alias("metric_value"),
+        F.to_date(F.lit("2022-04-14")).alias("reading_date"),
+    )
+    wh.write(
+        SILVER,
+        base.withColumn("reading_date", F.to_date(F.lit("2022-04-15"))).coalesce(1),
+    )
+    for i in range(4):
+        wh.append(SILVER, base.withColumn("raw_id", F.col("raw_id") + i * 40))
+    before = wh.file_stats(SILVER)
+    assert set(before) == {"reading_date=2022-04-14", "reading_date=2022-04-15"}
+    assert before["reading_date=2022-04-14"][0] >= 4
+    assert before["reading_date=2022-04-15"][0] == 1
+    rows_before = sorted(map(tuple, wh.read(SILVER).collect()))
+
+    assert wh.compact(SILVER, target_file_bytes=1 << 30) == ["reading_date=2022-04-14"]
+    after = wh.file_stats(SILVER)
+    assert after["reading_date=2022-04-14"][0] == 1
+    assert after["reading_date=2022-04-15"] == before["reading_date=2022-04-15"]
+    assert sorted(map(tuple, wh.read(SILVER).collect())) == rows_before
+    assert wh.compact(SILVER, target_file_bytes=1 << 30) == []
+
+
 def test_crashed_compaction_rolls_back(spark, tmp_path, monkeypatch):
     """Compaction is maintenance, not a transform — a compact() that
     dies mid-rewrite (task failure before job commit) must leave every
