@@ -35,9 +35,10 @@ from sensor_data_pipeline___spark.sources import ingest
 from sensor_data_pipeline___spark.warehouse import BRONZE, Warehouse
 
 #: Streaming bronze surrogate ids: ``batch_id * _ID_STRIDE + row_number``.
-#: Deterministic across micro-batch REPLAYS (unlike
-#: ``monotonically_increasing_id`` + max-id offset) and still strictly
-#: increasing across batches, which is all the J1 watermark needs.
+#: Deterministic across micro-batch REPLAYS (a POST's ids, line
+#: positions past bronze's id high-water, would be numbered anew) and
+#: still strictly increasing across batches, which is all the J1
+#: watermark needs.
 _ID_STRIDE = 1 << 40
 
 

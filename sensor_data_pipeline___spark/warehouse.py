@@ -23,7 +23,10 @@ add files to a partition, and :meth:`Warehouse.compact` folds those.
 
 Each table root also holds ``_schema.json``, the table's schema record
 (see :meth:`Warehouse.read`): the one piece of catalog metadata a
-table format would keep that plain parquet lacks.
+table format would keep that plain parquet lacks. Bronze's root also
+holds ``_ids.json``, its id record (see :meth:`Warehouse.max_id`): the
+id high-water and the data files it covers, the sequence that stands
+in for the reference's ``BIGSERIAL``.
 """
 
 from __future__ import annotations
@@ -61,6 +64,9 @@ _SCHEMA = {
 #: Spark's file listing; ``_metadata``/``_common_metadata`` would not
 #: do, parquet schema inference reads those.
 _RECORD = "_schema.json"
+
+#: The id record's file name (see :meth:`Warehouse.max_id`).
+_IDS = "_ids.json"
 
 
 class Warehouse:
@@ -161,11 +167,22 @@ class Warehouse:
             df = df.sortWithinPartitions(part, "metric_name")
         if not wipe:
             self._union_record(table, df.schema)
+        if table == BRONZE:
+            hw, covered = self._id_record(table)
+            listed = self._data_files(table)
         # pinned on the frame's session: the write runs under it
         with overwrite_mode(df.sparkSession, "static" if wipe else "dynamic"):
             df.write.mode(mode).partitionBy(part).parquet(self.path(table))
         if wipe:
             self._save_record(table, df.schema)
+        if table == BRONZE:
+            # the files this write added, and what it kept of the
+            # covered ones; files uncovered before stay uncovered
+            after = self._data_files(table)
+            new = after - listed
+            self._save_ids(
+                table, max(hw, self._max_id_in(table, new)), (covered & after) | new
+            )
 
     def _record_path(self, table: str) -> str:
         return os.path.join(self.path(table), _RECORD)
@@ -218,10 +235,83 @@ class Warehouse:
         self.write(table, df, mode="append")
 
     def max_id(self, table: str = BRONZE) -> int:
+        """The table's id high-water: the largest ``id`` it has ever
+        held, from the id record (``_ids.json`` at the table root).
+
+        Every :meth:`write` to bronze saves the record after its commit:
+        the high-water, raised to the largest id the write added (read
+        from the new files' parquet footers, so the write runs no extra
+        job), and the data files it covers. Here the table is listed on
+        the driver; when the listing matches the record, its high-water
+        is the answer and no Spark job runs. Otherwise only the
+        uncovered files are scanned and the record is saved again. That
+        covers a crash between a commit and its record, a compaction, a
+        bronze fed by the stream (whose writes skip :meth:`write`) and a
+        table without a record (adopted once).
+
+        The high-water never decreases, like a Postgres sequence:
+        deleted or rewritten rows do not lower it, so an id is never
+        handed out twice."""
         if not self.exists(table):
             return 0
-        val = self.read(table).agg(F.max("id")).first()[0]
-        return int(val or 0)
+        hw, covered = self._id_record(table)
+        files = self._data_files(table)
+        if files == covered:
+            return hw
+        hw = max(hw, self._max_id_in(table, files - covered))
+        self._save_ids(table, hw, files)
+        return hw
+
+    def _data_files(self, table: str) -> set[str]:
+        """The table's data files, relative to its root, as Spark lists
+        them (no path part starting with ``_`` or ``.``, so a crashed
+        write's ``_temporary`` files are not data)."""
+        root = _fsio.normalize(self.path(table))
+        rels = (
+            f[len(root):].lstrip("/")
+            for f in _fsio.list_files_recursive(root, ".parquet")
+        )
+        return {
+            rel for rel in rels
+            if not any(part[:1] in "_." for part in rel.split("/"))
+        }
+
+    def _id_record(self, table: str) -> tuple[int, set[str]]:
+        """(high-water, covered files) from the id record; (0, ∅)
+        without one."""
+        path = os.path.join(self.path(table), _IDS)
+        if not _fsio.exists(path):
+            return 0, set()
+        rec = json.loads(_fsio.read_text(path))
+        return int(rec["high_water"]), set(rec["files"])
+
+    def _save_ids(self, table: str, high_water: int, files: set[str]) -> None:
+        _fsio.write_text_atomic(
+            os.path.join(self.path(table), _IDS),
+            json.dumps({"high_water": high_water, "files": sorted(files)}),
+        )
+
+    def _max_id_in(self, table: str, files: set[str]) -> int:
+        """MAX(id) over ``files`` (relative to the table root), 0 for
+        none. A local file's parquet footer answers on the driver; the
+        files a footer cannot answer for (a URI root, a row group
+        written without statistics) go to one Spark aggregate."""
+        root = _fsio.normalize(self.path(table))
+        best, scan = 0, []
+        for rel in files:
+            f = os.path.join(root, rel)
+            m = None if _fsio.is_uri(f) else _footer_max_id(f)
+            if m is None:
+                scan.append(f)
+            else:
+                best = max(best, m)
+        if scan:
+            val = (
+                self.spark.read.schema("id long").parquet(*scan)
+                .agg(F.max("id")).first()[0]
+            )
+            best = max(best, int(val or 0))
+        return best
 
     def file_stats(self, table: str) -> dict[str, tuple[int, int]]:
         """{partition_dir: (n_files, total_bytes)} from a filesystem
@@ -307,6 +397,28 @@ class Warehouse:
                 .parquet(self.path(table))
             )
         return sorted(frag)
+
+
+def _footer_max_id(path: str) -> "int | None":
+    """MAX(id) of one local parquet file from its row groups' footer
+    statistics (exact for integers): 0 when ``id`` holds no value, None
+    when a row group with values carries no min/max."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    best = 0
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            c = g.column(ci)
+            if c.path_in_schema != "id":
+                continue
+            st = c.statistics
+            if st is not None and st.has_min_max:
+                best = max(best, st.max)
+            elif st is None or st.null_count != g.num_rows:
+                return None
+    return best
 
 
 def write_bucketed(

@@ -21,16 +21,18 @@ def wh(spark, tmp_path):
     return Warehouse(spark, str(tmp_path / "warehouse"))
 
 
-def _ingest(spark, wh, lines):
-    bronze, _ = ingest.ingest_batch(spark, lines)
-    offset = wh.max_id(BRONZE)
+def _post_increment(wh, lines):
+    """POST ``lines`` and return the bronze rows it appended: the
+    increment the stream body hands to ``run_pipeline``."""
     from pyspark.sql import functions as F
 
-    wh.append(BRONZE, bronze.withColumn("id", F.col("id") + offset))
+    hw = wh.max_id(BRONZE)
+    ingest.post(wh, lines)
+    return wh.read(BRONZE).filter(F.col("id") > hw).drop("ingest_date")
 
 
 def test_first_run_and_noop_rerun(spark, wh):
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     n_silver, n_gold = incremental.run_pipeline(wh)
     assert (n_silver, n_gold) == (4, 1)
     gold1 = wh.read(GOLD).collect()
@@ -45,12 +47,12 @@ def test_first_run_and_noop_rerun(spark, wh):
 
 
 def test_late_data_reopens_day(spark, wh):
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     time.sleep(1.1)
 
     # a late Voltage reading for the SAME old day (2022-04-14) arrives
-    _ingest(spark, wh, ["1649941819 Voltage 2.65"])
+    ingest.post(wh, ["1649941819 Voltage 2.65"])
     n_silver, n_gold = incremental.run_pipeline(wh)
     assert n_silver == 1
     assert n_gold == 1  # the old day was recomputed
@@ -62,17 +64,13 @@ def test_late_data_reopens_day(spark, wh):
 
 
 def test_new_day_does_not_touch_old_gold(spark, wh):
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     old_calc = wh.read(GOLD).collect()[0]["calculated_at"]
     time.sleep(1.1)
 
     # next day's readings (2022-04-15)
-    _ingest(
-        spark,
-        wh,
-        ["1650028217 Voltage 2.0", "1650028217 Current 10.0"],
-    )
+    ingest.post(wh, ["1650028217 Voltage 2.0", "1650028217 Current 10.0"])
     incremental.run_pipeline(wh)
     gold = {str(r["reading_date"]): r for r in wh.read(GOLD).collect()}
     assert len(gold) == 2
@@ -82,7 +80,7 @@ def test_new_day_does_not_touch_old_gold(spark, wh):
 
 
 def test_reprocessed_bronze_dedups_on_raw_id(spark, wh):
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     # silver watermark is wall-clock; force every bronze row to look
     # "new" again by re-running silver with full_refresh (M5) — result
@@ -94,7 +92,7 @@ def test_reprocessed_bronze_dedups_on_raw_id(spark, wh):
 
 
 def test_full_refresh_rebuilds(spark, wh):
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     n_silver, n_gold = incremental.run_pipeline(wh, full_refresh=True)
     assert (n_silver, n_gold) == (4, 1)
@@ -166,7 +164,7 @@ def test_backfill_gold_range(spark, wh):
 
     day2 = ["1650028217 Voltage 2.0", "1650028218 Current 10.0"]  # 2022-04-15
     day4 = ["1650201017 Voltage 1.0", "1650201018 Current 2.0"]  # 2022-04-17
-    _ingest(spark, wh, GOLDEN_LINES + day2 + day4)
+    ingest.post(wh, GOLDEN_LINES + day2 + day4)
     incremental.run_pipeline(wh)
     gold0 = {str(r["reading_date"]): r for r in wh.read(GOLD).collect()}
     assert set(gold0) == {"2022-04-14", "2022-04-15", "2022-04-17"}
@@ -224,7 +222,7 @@ def test_crashed_overwrite_leaves_old_partition_intact(spark, wh):
     — never a torn mix — and re-running the write must converge."""
     from pyspark.sql import functions as F
 
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     before = sorted(map(tuple, wh.read(GOLD).collect()))
     assert len(before) == 1
@@ -256,12 +254,8 @@ def test_crashed_multiday_overwrite_is_all_or_nothing(spark, wh):
     committed, old day half-replaced' state)."""
     from pyspark.sql import functions as F
 
-    _ingest(spark, wh, GOLDEN_LINES)  # 2022-04-14
-    _ingest(
-        spark,
-        wh,
-        ["1650028217 Voltage 2.0", "1650028218 Current 10.0"],  # 2022-04-15
-    )
+    ingest.post(wh, GOLDEN_LINES)  # 2022-04-14
+    ingest.post(wh, ["1650028217 Voltage 2.0", "1650028218 Current 10.0"])  # 2022-04-15
     incremental.run_pipeline(wh)
     before = sorted(map(tuple, wh.read(GOLD).collect()))
     assert len(before) == 2
@@ -291,7 +285,7 @@ def test_silver_schema_evolution_mid_stream(spark, wh):
     and the gold recompute must be unaffected."""
     from pyspark.sql import functions as F
 
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
 
     # evolution event: a manual enrichment lands files that carry a new
@@ -341,7 +335,7 @@ def test_silver_merge_after_evolution(spark, wh):
 
     from pyspark.sql import functions as F
 
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
 
     # materialize before overwriting the files being read
@@ -355,7 +349,7 @@ def test_silver_merge_after_evolution(spark, wh):
 
     _time.sleep(1.1)
     # a late reading for the same day re-opens the partition
-    _ingest(spark, wh, ["1649941819 Voltage 2.65"])
+    ingest.post(wh, ["1649941819 Voltage 2.65"])
     n = incremental.run_silver(wh)
     assert n == 1
 
@@ -388,10 +382,7 @@ def test_increment_fast_path_matches_watermark_path(spark, tmp_path):
     def run(mode):
         wh2 = Warehouse(spark, str(tmp_path / f"wh_{mode}"))
         for i, lines in enumerate(batches):
-            bronze, _ = ingest.ingest_batch(spark, lines)
-            offset = wh2.max_id(BRONZE)
-            inc = bronze.withColumn("id", F.col("id") + offset)
-            wh2.append(BRONZE, inc)
+            inc = _post_increment(wh2, lines)
             if mode == "watermark" or i == 0:
                 # batch 0 has no silver yet → both modes take the
                 # classic path (the fast path requires exists(SILVER))
@@ -439,19 +430,14 @@ def test_increment_fast_path_empty_gold_write_is_noop(spark, tmp_path):
 
     wh2 = Warehouse(spark, str(tmp_path / "wh"))
     # day 1: both metrics -> a gold row
-    b0, _ = ingest.ingest_batch(
-        spark, ["1649941817 Voltage 1.34", "1649941818 Current 12.0"]
-    )
-    wh2.append(BRONZE, b0)
+    ingest.post(wh2, ["1649941817 Voltage 1.34", "1649941818 Current 12.0"])
     incremental.run_pipeline(wh2)
     gold0 = wh2.read(GOLD).collect()
     assert len(gold0) == 1
 
     # day 2 increment: ONLY Voltage -> silver_to_gold aggregates to
     # zero rows (F5 both-metrics filter)
-    b1, _ = ingest.ingest_batch(spark, ["1650028219 Voltage 3.00"])
-    b1 = b1.withColumn("id", F.col("id") + wh2.max_id(BRONZE))
-    wh2.append(BRONZE, b1)
+    b1 = _post_increment(wh2, ["1650028219 Voltage 3.00"])
     n, g = incremental.run_pipeline(
         wh2, increment=b1,
         affected_days=[__import__("datetime").date(2022, 4, 15)],
@@ -479,10 +465,7 @@ def test_increment_fast_path_subset_days_never_deletes(spark, tmp_path):
 
     wh2 = Warehouse(spark, str(tmp_path / "wh"))
     # seed day 1 (2022-04-14) with two rows via the classic path
-    b0, _ = ingest.ingest_batch(
-        spark, ["1649941817 Voltage 1.34", "1649941818 Current 12.0"]
-    )
-    wh2.append(BRONZE, b0)
+    ingest.post(wh2, ["1649941817 Voltage 1.34", "1649941818 Current 12.0"])
     incremental.run_pipeline(wh2)
     day1 = datetime.date(2022, 4, 14)
     before = sorted(
@@ -496,13 +479,11 @@ def test_increment_fast_path_subset_days_never_deletes(spark, tmp_path):
     # increment touches day 1 AND day 2, but the caller only lists
     # day 2 — the day-1 increment row must be IGNORED, not merged, and
     # day 1's existing partition must survive byte-identically
-    b1, _ = ingest.ingest_batch(
-        spark,
+    b1 = _post_increment(
+        wh2,
         ["1650028219 Voltage 3.00", "1650028220 Current 14.0",
          "1649941819 Voltage 9.99"],
     )
-    b1 = b1.withColumn("id", F.col("id") + wh2.max_id(BRONZE))
-    wh2.append(BRONZE, b1)
     with pytest.raises(ValueError, match="affected_days"):
         incremental.run_pipeline(wh2, increment=b1)
     assert wh2.read(SILVER).count() == 2
@@ -566,7 +547,7 @@ def test_backfill_gold_drops_stale_day_on_file_uri(spark, tmp_path):
     wh = Warehouse(spark, "file:" + str(tmp_path / "wh_uri"))
     assert _fsio.is_uri(wh.root)
     day2 = ["1650028217 Voltage 2.0", "1650028218 Current 10.0"]  # 2022-04-15
-    _ingest(spark, wh, GOLDEN_LINES + day2)
+    ingest.post(wh, GOLDEN_LINES + day2)
     assert incremental.run_pipeline(wh) == (6, 2)
     for table in (BRONZE, SILVER, GOLD):
         assert wh.exists(table)
@@ -590,11 +571,11 @@ def test_watermark_path_recovers_lagging_gold(spark, wh):
     must not take the one-pass path — it finds no new bronze rows, so
     it would recompute nothing — but fall back to run_gold, which
     recomputes the late line's day from its own watermark."""
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     time.sleep(1.1)
 
-    _ingest(spark, wh, ["1649941819 Voltage 2.65"])
+    ingest.post(wh, ["1649941819 Voltage 2.65"])
     assert incremental.run_silver(wh) == 1
     assert incremental.run_pipeline(wh) == (0, 1)
     gold = wh.read(GOLD).collect()
@@ -608,16 +589,16 @@ def test_watermark_path_one_metric_day_lands_with_its_pair(spark, wh):
     row: the one-pass path returns (1, 0) (its gold Observation reads
     0 on an empty write). Gold then lags silver, so the run that adds
     the day's Current recomputes the day: AVG(V) × AVG(I) = 3 × 14."""
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     time.sleep(1.1)
 
-    _ingest(spark, wh, ["1650028219 Voltage 3.00"])
+    ingest.post(wh, ["1650028219 Voltage 3.00"])
     assert incremental.run_pipeline(wh) == (1, 0)
     assert wh.read(GOLD).count() == 1
     time.sleep(1.1)
 
-    _ingest(spark, wh, ["1650028220 Current 14.0"])
+    ingest.post(wh, ["1650028220 Current 14.0"])
     assert incremental.run_pipeline(wh) == (1, 1)
     gold = {str(r["reading_date"]): r["metric_value"] for r in wh.read(GOLD).collect()}
     assert gold["2022-04-15"] == pytest.approx(42.0)
@@ -632,10 +613,10 @@ def test_steady_hourly_run_job_count_pinned(spark, wh):
     most 8 jobs on this shape. The run_silver + run_gold pair it
     replaces took 18. Pin the ceiling so a re-introduced count,
     distinct or gold checkpoint fails here rather than as a drift."""
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     time.sleep(1.1)
-    _ingest(spark, wh, ["1649941819 Voltage 2.0", "1650028220 Current 13.0"])
+    ingest.post(wh, ["1649941819 Voltage 2.0", "1650028220 Current 13.0"])
 
     sc = spark.sparkContext
     sc.setJobGroup("hourly-pin", "steady hourly run_pipeline job-count pin")
@@ -664,13 +645,13 @@ def test_pipeline_writes_one_silver_file_per_day(spark, wh):
         ), stats
 
     day2 = ["1650028217 Voltage 2.0", "1650028218 Current 10.0"]  # 2022-04-15
-    _ingest(spark, wh, GOLDEN_LINES + day2)
+    ingest.post(wh, GOLDEN_LINES + day2)
     assert incremental.run_pipeline(wh) == (6, 2)
     assert_one_file_per_day(2)
     time.sleep(1.1)
 
     # late lines for both old days, and a new day
-    _ingest(spark, wh, [
+    ingest.post(wh, [
         "1649941819 Voltage 2.65",
         "1650028219 Current 14.0",
         "1650114617 Voltage 3.0",
@@ -681,12 +662,10 @@ def test_pipeline_writes_one_silver_file_per_day(spark, wh):
     time.sleep(1.1)
 
     # an increment with a late day-2 line and a new day
-    inc, _ = ingest.ingest_batch(
-        spark, ["1650028220 Voltage 4.0", "1650201017 Voltage 5.0",
-                "1650201018 Current 2.0"]
+    inc = _post_increment(
+        wh, ["1650028220 Voltage 4.0", "1650201017 Voltage 5.0",
+             "1650201018 Current 2.0"]
     )
-    inc = inc.withColumn("id", F.col("id") + wh.max_id(BRONZE))
-    wh.append(BRONZE, inc)
     days = [datetime.date(2022, 4, 15), datetime.date(2022, 4, 17)]
     assert incremental.run_pipeline(wh, increment=inc, affected_days=days) == (-1, -1)
     assert_one_file_per_day(4)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -16,6 +17,8 @@ from sensor_data_pipeline___spark.functions.datetime_fmt import (
     normalize_range,
 )
 from sensor_data_pipeline___spark.operators.silver import bronze_to_silver
+from sensor_data_pipeline___spark.sources import ingest
+from tests.conftest import INVALID_LINES
 
 #: ASCII only: hypothesis's regex strategy draws Unicode digits for \d
 #: (e.g. '٠'), which Python's float() accepts but the engine's
@@ -72,6 +75,42 @@ def test_divergent_numerics_pass_gate_but_drop_at_silver(spark, rows):
         F.current_timestamp().alias("ingested_at"),
     )
     assert bronze_to_silver(bronze).count() == 0  # bronze ⊇ silver (§2.9)
+
+
+#: Python's ``strip`` removes all of these; the gate's ``\s`` (Java,
+#: ASCII) matches space, tab and vertical tab, not NBSP or U+3000.
+_ws = st.sampled_from(["", " ", "\t", "\x0b", "\u00a0", "\u3000"])
+gate_lines = st.one_of(
+    st.builds(
+        lambda pre, ts, nm, val, post: f"{pre}{ts} {nm} {val}{post}",
+        _ws, timestamps, names, silver_values, _ws,
+    ),
+    st.sampled_from(INVALID_LINES),
+    st.lists(_ws, max_size=3).map("".join),
+)
+
+
+@settings(max_examples=20, deadline=None, derandomize=True)
+@given(st.lists(gate_lines, min_size=1, max_size=10))
+def test_post_gate_matches_stream_aggregate(spark, lines):
+    """The POST gate, folded into the local relation on the driver,
+    gives the verdict and counts the stream's distributed
+    ``flag_lines`` aggregate gives for the same lines."""
+    dist = spark.createDataFrame([(ln,) for ln in lines], "raw_line string")
+    flagged, invalid = ingest.flag_lines(dist.repartition(2))
+    want = flagged.agg(
+        invalid, F.sum(F.col("_blank").cast("int")).alias("blank")
+    ).first()
+    blank, n_invalid = ingest.validate_batch(ingest.lines_df(spark, lines))
+    assert (n_invalid, len(blank)) == (want["invalid"], want["blank"])
+    if n_invalid:
+        with pytest.raises(ingest.IngestRejected):
+            ingest.ingest_batch(spark, lines)
+    else:
+        _, res = ingest.ingest_batch(spark, lines)
+        assert res == ingest.IngestResult(
+            accepted=len(lines) - want["blank"], skipped=want["blank"]
+        )
 
 
 @settings(max_examples=10, deadline=None)

@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 from sensor_data_pipeline___spark.operators import incremental, serving
 from sensor_data_pipeline___spark.plans import explain
+from sensor_data_pipeline___spark.sources import ingest
 from sensor_data_pipeline___spark.warehouse import _RECORD, GOLD, SILVER, Warehouse
 from tests.conftest import GOLDEN_LINES
-from tests.test_incremental import _ingest
 
 DAY2 = ["1650028217 Voltage 2.0", "1650028218 Current 10.0"]  # 2022-04-15
 
@@ -50,7 +50,7 @@ def _evolve(spark, wh):
     """run_pipeline, then a manual enrichment appends silver files that
     carry a new ``sensor_location`` column (the evolution of
     test_silver_schema_evolution_mid_stream)."""
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     patch = (
         wh.read(SILVER)
@@ -93,7 +93,7 @@ def _compact(spark, wh):
 
 
 def _second_instance(spark, wh):
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     # another Warehouse on the same root evolves the table; `wh` never
     # wrote the evolved column, yet must read it
@@ -187,7 +187,7 @@ def test_failed_write_adding_a_column_leaves_rows_unchanged(spark, wh):
     was unioned before the commit, so the new column may show up, but
     only all-null — the table's rows are unchanged and nothing on disk
     is hidden."""
-    _ingest(spark, wh, GOLDEN_LINES)
+    ingest.post(wh, GOLDEN_LINES)
     incremental.run_pipeline(wh)
     cols = wh.read(GOLD).columns
     before = sorted(map(tuple, wh.read(GOLD).collect()))
@@ -221,7 +221,7 @@ def _jobs(spark, group, fn):
 def test_recorded_read_fires_no_job(spark, wh):
     """Reading a recorded table is driver-side only; the footer job
     comes back only for a table without a record."""
-    _ingest(spark, wh, GOLDEN_LINES + DAY2)
+    ingest.post(wh, GOLDEN_LINES + DAY2)
     incremental.run_pipeline(wh)
     n, _ = _jobs(spark, "read-recorded", lambda: (wh.read(SILVER), wh.read(GOLD)))
     assert n == 0
@@ -236,7 +236,7 @@ def test_get_job_budget_pinned(spark, wh):
     the fetch's single task (a global ``orderBy`` added a sampling
     and a sort job; a ``mergeSchema`` read one more per table). A
     re-introduced footer job or range exchange fails here."""
-    _ingest(spark, wh, GOLDEN_LINES + DAY2)
+    ingest.post(wh, GOLDEN_LINES + DAY2)
     incremental.run_pipeline(wh)
 
     def get():
@@ -259,7 +259,7 @@ def test_get_over_separately_written_days_is_sorted_without_exchange(spark, wh):
     Exchange."""
     day3 = ["1650114617 Current 11.0", "1650114616 Voltage 3.0"]  # 2022-04-16
     for lines in (DAY2, GOLDEN_LINES, day3):
-        _ingest(spark, wh, lines)
+        ingest.post(wh, lines)
         incremental.run_pipeline(wh)
         time.sleep(1.1)  # watermark separation between the runs
     df = serving.to_wire_format(

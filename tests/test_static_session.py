@@ -46,9 +46,7 @@ def test_hourly_cycles_keep_every_day(static_spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     day2 = ["1650028217 Voltage 2.0", "1650028217 Current 10.0"]
     for lines in (GOLDEN_LINES, day2):
-        bronze, _ = ingest.ingest_batch(spark, lines)
-        offset = wh.max_id(BRONZE)
-        wh.append(BRONZE, bronze.withColumn("id", F.col("id") + offset))
+        ingest.post(wh, lines)
         incremental.run_pipeline(wh)
         time.sleep(1.1)  # watermark separation between cycles
     assert wh.read(SILVER).count() == 6
